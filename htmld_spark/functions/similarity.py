@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from htmld_spark.functions.local import local_df
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -366,7 +368,7 @@ def ann_ivf_topk(
     finally:
         assigned.unpersist()
     spark = df.sparkSession
-    return spark.createDataFrame(rows, schema=result.schema)
+    return local_df(spark, rows, result.schema)
 
 
 def sized_rows_per_band(n_rows: int, margin: int = 4) -> int:

@@ -15,6 +15,8 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from htmld_spark.functions.local import local_df
+
 TOKEN_SPLIT = r"\s+"
 
 # Language-ID stopword probes. Deliberately small + disjoint; tie-break is
@@ -916,7 +918,7 @@ def pack_shards(
         offsets.append((pid, acc))
         acc += int(totals.get(pid, 0) or 0)
     spark = df.sparkSession
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "_pid long, _off long")
+    off_df = local_df(spark, offsets or [(0, 0)], "_pid long, _off long")
 
     cum_before = F.col("_off") + F.col("_local_cum") - F.col(tokens_col)
     return (

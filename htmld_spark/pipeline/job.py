@@ -29,6 +29,11 @@ Scale design (the part that must survive 1000 executors × 100 TB):
   A crash mid-round loses only that round: its buckets are absent from the
   manifest, and the dynamic overwrite replaces any partial bucket directory
   on retry (R15).
+- A round's bookkeeping stays small and in the JVM: the lineage read opens
+  only the round's own ``bucket=`` directories with the known schema (no
+  listing of earlier rounds' output, no footer inference — so a round's
+  cost does not grow with the buckets already done), and the manifest rows
+  are appended from an Arrow table (no Python task).
 - Skew (R4): the output-shuffle key is (bucket, salt) where salt spreads
   oversized documents (n_bytes > salt_threshold) over ``salt_factor``
   subkeys, so a bucket of MiB-blob outputs doesn't become one straggler
@@ -45,10 +50,13 @@ import os
 import time
 from dataclasses import dataclass, field
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from htmld_spark import ENGINE_VERSION
 from htmld_spark.engine.extract import MAIN_TEXT_RULES_VERSION
+from htmld_spark.functions.local import local_df
 from htmld_spark.functions.udfs import DEFAULT_BYTE_BUDGET, extract_df
 from htmld_spark.pipeline.io import read_pages, write_output
 
@@ -75,37 +83,60 @@ class JobConfig:
         return os.path.join(self.output, "_manifest")
 
 
+MANIFEST_DDL = (
+    "bucket int, n_rows bigint, n_bytes bigint, n_errors bigint, "
+    "n_exec_partitions int, wall_ms bigint, engine_version string, "
+    "rules_version string, input_source string"
+)
+
+
 def _read_done_buckets(spark: SparkSession, manifest_path: str) -> set[int]:
     try:
-        rows = spark.read.parquet(manifest_path).select("bucket").distinct().collect()
-        return {r["bucket"] for r in rows}
-    except Exception:
+        m = spark.read.schema(MANIFEST_DDL).parquet(manifest_path)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return set()  # no manifest yet
+    return {r["bucket"] for r in m.select("bucket").distinct().collect()}
 
 
-def _append_manifest(spark: SparkSession, cfg: JobConfig, rows: list[dict]) -> None:
-    if not rows:
-        return
-    df = spark.createDataFrame(
+def _round_lineage(
+    spark: SparkSession, cfg: JobConfig, schema: StructType, buckets: list[int]
+) -> DataFrame | None:
+    """The written output of ``buckets`` alone: only their ``bucket=``
+    directories, read with the known output ``schema``, so the read neither
+    lists earlier rounds' buckets nor infers a schema from footers. None
+    when the write created none of them (a bucket that received no rows
+    has no directory)."""
+    data = os.path.join(cfg.output, "data")
+    sc = spark.sparkContext
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    fs = Path(data).getFileSystem(sc._jsc.hadoopConfiguration())
+    paths = [os.path.join(data, f"bucket={b}") for b in buckets]
+    paths = [p for p in paths if fs.exists(Path(p))]
+    if not paths:
+        return None
+    return spark.read.schema(schema).option("basePath", data).parquet(*paths)
+
+
+def _manifest_df(
+    spark: SparkSession,
+    cfg: JobConfig,
+    buckets: list[int],
+    lineage: dict[int, tuple],
+    wall_ms: int,
+) -> DataFrame:
+    """One manifest row per bucket of the round, zeros for a bucket that
+    received no rows. Built from Arrow, so appending it runs no Python task."""
+    zero = (0, 0, 0, 0)
+    return local_df(
+        spark,
         [
-            (
-                r["bucket"],
-                r["n_rows"],
-                r["n_bytes"],
-                r["n_errors"],
-                r["n_exec_partitions"],
-                r["wall_ms"],
-                ENGINE_VERSION,
-                MAIN_TEXT_RULES_VERSION,
-                r["input_source"],
-            )
-            for r in rows
+            (b, *lineage.get(b, zero), wall_ms, ENGINE_VERSION, MAIN_TEXT_RULES_VERSION, cfg.source)
+            for b in buckets
         ],
-        "bucket int, n_rows bigint, n_bytes bigint, n_errors bigint, "
-        "n_exec_partitions int, wall_ms bigint, engine_version string, "
-        "rules_version string, input_source string",
+        MANIFEST_DDL,
     )
-    df.coalesce(1).write.mode("append").parquet(cfg.manifest_path)
 
 
 def prepare_input(spark: SparkSession, cfg: JobConfig) -> DataFrame:
@@ -149,10 +180,24 @@ def _salted(df: DataFrame, cfg: JobConfig) -> DataFrame:
 def run_extract_job(
     spark: SparkSession, cfg: JobConfig, resume: bool = True
 ) -> dict:
-    """Run (or resume) the extraction job. Returns run stats."""
+    """Run (or resume) the extraction job. Returns run stats. Its Spark jobs
+    are described by round and step (``extract round 2/4: lineage``); the
+    caller's job description is back in place when it returns."""
+    sc = spark.sparkContext
+    caller_description = sc.getLocalProperty("spark.job.description")
+    try:
+        return _run_rounds(spark, cfg, resume)
+    finally:
+        sc.setJobDescription(caller_description)
+
+
+def _run_rounds(spark: SparkSession, cfg: JobConfig, resume: bool) -> dict:
+    sc = spark.sparkContext
     base = prepare_input(spark, cfg)
+    sc.setJobDescription("extract: read manifest")
     done = _read_done_buckets(spark, cfg.manifest_path) if resume else set()
     pending = sorted(set(range(cfg.n_buckets)) - done)
+    n_rounds = -(-len(pending) // cfg.buckets_per_round)
     stats = {
         "n_buckets": cfg.n_buckets,
         "done_at_start": len(done),
@@ -160,8 +205,9 @@ def run_extract_job(
         "rows_written": 0,
         "errors": 0,
     }
-    for lo in range(0, len(pending), cfg.buckets_per_round):
+    for i, lo in enumerate(range(0, len(pending), cfg.buckets_per_round), 1):
         round_buckets = pending[lo : lo + cfg.buckets_per_round]
+        step = f"extract round {i}/{n_rounds}"
         t0 = time.monotonic()
         round_df = base.filter(F.col("bucket").isin(round_buckets))
         # extract FIRST (narrow over scan splits), shuffle only the output
@@ -186,13 +232,13 @@ def run_extract_job(
             from htmld_spark.functions.text import enrich_features
 
             extracted = enrich_features(extracted)
+        sc.setJobDescription(f"{step}: write")
         write_output(_salted(extracted, cfg), os.path.join(cfg.output, "data"), ["bucket"])
         wall_ms = int((time.monotonic() - t0) * 1000)
         # Lineage stats from the (small) written output — html is never re-read.
-        out = spark.read.parquet(os.path.join(cfg.output, "data")).filter(
-            F.col("bucket").isin(round_buckets)
-        )
-        agg = (
+        sc.setJobDescription(f"{step}: lineage")
+        out = _round_lineage(spark, cfg, extracted.schema, round_buckets)
+        agg = [] if out is None else (
             out.groupBy("bucket")
             .agg(
                 F.count("*").alias("n_rows"),
@@ -202,25 +248,13 @@ def run_extract_job(
             )
             .collect()
         )
-        got = {r["bucket"]: r for r in agg}
-        rows = []
-        for b in round_buckets:
-            r = got.get(b)
-            rows.append(
-                {
-                    "bucket": b,
-                    "n_rows": r["n_rows"] if r else 0,
-                    "n_bytes": r["n_bytes"] if r else 0,
-                    "n_errors": r["n_errors"] if r else 0,
-                    "n_exec_partitions": r["n_exec_partitions"] if r else 0,
-                    "wall_ms": wall_ms,
-                    "input_source": cfg.source,
-                }
-            )
-        _append_manifest(spark, cfg, rows)
+        lineage = {r["bucket"]: tuple(r)[1:] for r in agg}
+        sc.setJobDescription(f"{step}: manifest")
+        manifest = _manifest_df(spark, cfg, round_buckets, lineage, wall_ms)
+        manifest.coalesce(1).write.mode("append").parquet(cfg.manifest_path)
         stats["rounds"] += 1
-        stats["rows_written"] += sum(x["n_rows"] for x in rows)
-        stats["errors"] += sum(x["n_errors"] for x in rows)
+        stats["rows_written"] += sum(r["n_rows"] for r in agg)
+        stats["errors"] += sum(r["n_errors"] for r in agg)
     return stats
 
 

@@ -309,3 +309,113 @@ def test_encoding_kernels_e2e(spark):
         (F.col("encoding") != F.col("e_exp"))
         | (F.col("source") != F.col("s_exp"))
     ).count() == 0
+
+
+@pytest.fixture(scope="module")
+def sparse_job(spark, pages_path, tmp_path_factory):
+    """A finished two-round job over 12 pages and 32 buckets: most buckets
+    receive no rows. The caller's job description is set around the run."""
+    src = str(tmp_path_factory.mktemp("sparse_src")) + "/pages.parquet"
+    spark.read.parquet(pages_path).orderBy("url", "warc_ts").limit(12).write.parquet(src)
+    out = str(tmp_path_factory.mktemp("sparse_job"))
+    shutil.rmtree(out, ignore_errors=True)
+    cfg = JobConfig(
+        source=src, output=out, n_buckets=32, buckets_per_round=16,
+        with_spans=False,
+    )
+    sc = spark.sparkContext
+    sc.setJobDescription("caller's description")
+    try:
+        stats = run_extract_job(spark, cfg)
+        description_after = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setJobDescription(None)
+    return cfg, stats, description_after
+
+
+def _bucket_of(path: str) -> int:
+    part = next(p for p in path.split("/") if p.startswith("bucket="))
+    return int(part[len("bucket="):])
+
+
+def test_job_manifest_one_row_per_bucket_matches_output(spark, sparse_job):
+    """Every bucket, empty ones included, gets exactly one manifest row in
+    the declared schema, and its lineage counts equal a recompute from the
+    written output."""
+    from pyspark.sql.types import StructType
+
+    from htmld_spark.pipeline.job import MANIFEST_DDL
+
+    cfg, stats, description_after = sparse_job
+    assert stats["rounds"] == 2 and stats["rows_written"] == 12
+    assert description_after == "caller's description"
+    m = spark.read.parquet(cfg.manifest_path)
+    assert m.schema == StructType.fromDDL(MANIFEST_DDL)
+    got = {r["bucket"]: r for r in m.collect()}
+    assert m.count() == len(got) == cfg.n_buckets
+    data = spark.read.parquet(os.path.join(cfg.output, "data"))
+    expected = {
+        r["bucket"]: r
+        for r in data.groupBy("bucket")
+        .agg(
+            F.count("*").alias("n_rows"),
+            F.sum("n_bytes").alias("n_bytes"),
+            F.sum(F.when(~F.col("parse_ok"), 1).otherwise(0)).alias("n_errors"),
+            F.countDistinct("exec_partition_id").alias("n_exec_partitions"),
+        )
+        .collect()
+    }
+    assert 0 < len(expected) < cfg.n_buckets  # some buckets received no rows
+    for b, r in got.items():
+        e = expected.get(b)
+        for col in ("n_rows", "n_bytes", "n_errors", "n_exec_partitions"):
+            assert r[col] == (e[col] if e else 0), (b, col)
+        assert r["input_source"] == cfg.source
+
+
+def test_job_lineage_reads_only_round_buckets(spark, sparse_job):
+    """A later round's lineage read opens only that round's bucket
+    directories, not the output of the rounds before it."""
+    from htmld_spark.pipeline.job import _round_lineage
+
+    cfg, _, _ = sparse_job
+    data = os.path.join(cfg.output, "data")
+    written = {_bucket_of(d) for d in os.listdir(data) if d.startswith("bucket=")}
+    round1, round2 = list(range(16)), list(range(16, 32))
+    assert written & set(round1) and written & set(round2)
+    schema = spark.read.parquet(data).schema
+    files = _round_lineage(spark, cfg, schema, round2).inputFiles()
+    assert {_bucket_of(f) for f in files} == written & set(round2)
+    assert _round_lineage(spark, cfg, schema, [b for b in round2 if b not in written]) is None
+
+
+def test_job_manifest_append_runs_no_python_task(spark, sparse_job):
+    """The manifest rows reach the JVM as Arrow: no PythonRDD in the
+    manifest DataFrame's RDD lineage, and zeros for an empty bucket."""
+    from htmld_spark.pipeline.job import _manifest_df
+
+    cfg, _, _ = sparse_job
+    df = _manifest_df(spark, cfg, [3, 4], {3: (5, 700, 1, 2)}, 1234)
+    assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+    assert [tuple(r)[:6] for r in df.collect()] == [
+        (3, 5, 700, 1, 2, 1234),
+        (4, 0, 0, 0, 0, 1234),
+    ]
+
+
+def test_job_raises_on_corrupt_manifest(spark, sparse_job, tmp_path_factory):
+    """An unreadable manifest fails the job instead of reading as 'nothing
+    done' and silently re-running every bucket."""
+    cfg, _, _ = sparse_job
+    out = str(tmp_path_factory.mktemp("corrupt_manifest"))
+    shutil.rmtree(out)
+    shutil.copytree(cfg.output, out)
+    copy = JobConfig(
+        source=cfg.source, output=out, n_buckets=cfg.n_buckets,
+        buckets_per_round=cfg.buckets_per_round, with_spans=False,
+    )
+    victim = next(f for f in os.listdir(copy.manifest_path) if f.endswith(".parquet"))
+    with open(os.path.join(copy.manifest_path, victim), "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        run_extract_job(spark, copy)
