@@ -1,4 +1,4 @@
-"""Driver-side rows → DataFrame without a Python worker.
+"""Local Python rows → DataFrame without a Python worker.
 
 ``spark.createDataFrame(list_of_tuples, ddl)`` plans a ``PythonRDD``: its
 first action starts a Python task just to unpickle a handful of rows. The
@@ -17,7 +17,7 @@ from pyspark.sql.types import StructType
 def local_df(
     spark: SparkSession, rows: Sequence[Sequence], schema: str | StructType
 ) -> DataFrame:
-    """A DataFrame over driver-side ``rows`` (tuples or Rows, in ``schema``
+    """A DataFrame over local ``rows`` (tuples or Rows, in ``schema``
     column order), typed exactly as ``schema`` (a DDL string or a
     StructType, nullability included), built from Arrow."""
     import pyarrow as pa
