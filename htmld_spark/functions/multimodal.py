@@ -86,7 +86,7 @@ def _fake_image_stats(payload: bytes, width: int, height: int):
     return round(mean_r, 4), round(mean_g, 4), round(mean_b, 4), phash
 
 
-def make_image_features_fn(byte_budget: int = 64 << 20):
+def make_image_features_fn():
     """mapInArrow: media batches (kind='image') → image_features rows."""
 
     def image_features(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

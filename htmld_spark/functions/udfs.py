@@ -1,37 +1,57 @@
-"""Arrow-batched extraction UDF — pipeline operator R6 (SURVEY.md §2.B).
+"""Arrow document kernels: the engine inside one ``mapInArrow`` (SURVEY.md §2.B).
 
-The whole §2.A engine runs inside ``mapInArrow``: JVM → Python crosses once
-per Arrow batch (never per row — BASELINE.json input_hint: "vectorized
-pandas/Arrow UDFs (no per-row Python)"). Inside a batch the per-document
-hot loop is pure-Python engine calls (tokenize → arena DOM → extract), the
-Python analog of the reference's single-pass parse (src/html/parser.d
-[recalled] — SURVEY.md §3.1).
+Every document kernel here — extract, select_count, select_extract,
+pdf_extract, pdf_pages, pdf_info, links, meta and the charset sniff — is
+one call of the scaffold ``_map_docs``. A kernel states three things:
 
-Oversized-blob handling (R4): incoming record batches are re-chunked by a
-byte budget, so a batch containing several ~MiB html blobs is processed and
-emitted in smaller slices — bounds peak memory per worker regardless of
-``spark.sql.execution.arrow.maxRecordsPerBatch`` and keeps output batches
-streaming even when one input batch is huge.
+- its output schema, written once as an Arrow schema (the Spark schema is
+  derived from it with ``from_arrow_schema``);
+- a per-document function over the kernel's input columns, returning the
+  values of the output columns the scaffold does not fill;
+- the values it emits when a document fails.
+
+The scaffold owns the rest of the JVM → Python crossing, which happens
+once per Arrow batch, never per row (BASELINE.json input_hint:
+"vectorized pandas/Arrow UDFs (no per-row Python)"):
+
+- Column lookup. The schema's leading ``url``/``warc_ts``/``lang``/
+  ``pdf_id`` columns pass through from the input, as typed nulls when the
+  input lacks them; an absent optional input reaches the per-document
+  function as None, a null document as ``b""``.
+- Byte-budget slicing (R4). Each input batch is processed and emitted in
+  slices whose summed document bytes stay under a budget, which bounds
+  worker memory whatever ``spark.sql.execution.arrow.maxRecordsPerBatch``
+  is and keeps output streaming when one input batch holds MiB blobs.
+- The columns it can fill itself: ``n_bytes`` (the document's size),
+  ``spans`` (accumulated columnar, no per-span Python objects) and
+  ``exec_partition_id`` (one TaskContext lookup per task).
+- The Arrow build, including fan-out: a kernel may emit several rows per
+  document, whose pass-through columns are taken from their source row.
+
+One error policy for every kernel: a document whose function raises never
+kills the task. The exception is logged, the document's partial spans are
+dropped, and it emits the kernel's failure values — ``parse_ok`` false
+where the schema has that column, null computed columns where it does not.
+
+Kernels call engine functions through their modules (``dom.parse_document``
+rather than a name bound at import), so a wrapper installed on an engine
+module, such as a timer or a test's fault injection, sees every call.
 """
 
 from __future__ import annotations
 
+import itertools
+import logging
 from collections.abc import Iterator
 
 import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark import TaskContext
+from pyspark.sql.pandas.types import from_arrow_schema
 
-from htmld_spark import ENGINE_VERSION
-from htmld_spark.engine.dom import parse_document
-from htmld_spark.engine.encoding import (
-    content_type_charset,
-    sniff_encoding,
-    to_utf8,
-)
-from htmld_spark.engine.extract import (
-    MAIN_TEXT_RULES_VERSION,
-    element_span_columns,
-    main_text,
-)
+from htmld_spark.engine import dom, encoding, extract, links, meta, selector
+
+DEFAULT_BYTE_BUDGET = 32 << 20  # 32 MiB of raw documents per processing slice
 
 SPAN_TYPE = pa.struct(
     [
@@ -44,31 +64,18 @@ SPAN_TYPE = pa.struct(
         ("text_end", pa.int64()),
     ]
 )
-SPANS_TYPE = pa.list_(SPAN_TYPE)
 
-# Spark-side schemas (DDL) — keep in sync with the arrow builders below.
-EXTRACT_SCHEMA = (
-    "url string, warc_ts timestamp, lang string, text string, "
-    "n_bytes bigint, n_nodes int, n_spans int, parse_ok boolean, "
-    "spans array<struct<node_id:int, parent_id:int, tag:string, "
-    "start:bigint, end:bigint, text_start:bigint, text_end:bigint>>, "
-    "exec_partition_id int"
-)
-EXTRACT_SCHEMA_NO_SPANS = (
-    "url string, warc_ts timestamp, lang string, text string, "
-    "n_bytes bigint, n_nodes int, n_spans int, parse_ok boolean, "
-    "exec_partition_id int"
-)
-
-DEFAULT_BYTE_BUDGET = 32 << 20  # 32 MiB of raw html per processing slice
+_TS = pa.timestamp("us")
+_STRINGS = pa.list_(pa.string())
+# leading schema columns with these names are copied from the input row
+_PASS_THROUGH = frozenset(("url", "warc_ts", "lang", "pdf_id"))
+_log = logging.getLogger(__name__)
 
 
 def _slice_offsets(html_col, byte_budget: int) -> list[tuple[int, int]]:
     """Split a batch's rows into [start, end) slices whose summed html bytes
     stay under ``byte_budget`` (always ≥1 row per slice). Lengths come from
     one vectorized kernel — no per-row Arrow scalar objects."""
-    import pyarrow.compute as pc
-
     lens = pc.binary_length(html_col).fill_null(0).to_pylist()
     n = len(lens)
     slices = []
@@ -85,661 +92,311 @@ def _slice_offsets(html_col, byte_budget: int) -> list[tuple[int, int]]:
     return slices
 
 
-def make_extract_fn(with_spans: bool = True, byte_budget: int = DEFAULT_BYTE_BUDGET):
-    """Build the mapInArrow function. Input batches must carry at least
-    (url, html); (warc_ts, lang) pass through when present."""
+class _SpanColumns:
+    """One slice's ``spans`` column, accumulated columnar: the engine appends
+    each document's spans to 7 flat lists (SPAN_TYPE order), and each
+    document closes one list offset."""
 
-    def extract_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        try:
-            from pyspark import TaskContext
+    def __init__(self):
+        self.cols = tuple([] for _ in SPAN_TYPE)
+        self.offsets = [0]
 
-            ctx = TaskContext.get()
-            partition_id = ctx.partitionId() if ctx is not None else -1
-        except Exception:  # pragma: no cover - non-Spark context
-            partition_id = -1
+    def end_doc(self, ok: bool) -> None:
+        if not ok:
+            # a failure mid-document can leave the lists at different
+            # lengths; cut them all back to the last closed document
+            for col in self.cols:
+                del col[self.offsets[-1]:]
+        self.offsets.append(len(self.cols[0]))
 
+    def array(self) -> pa.Array:
+        struct = pa.StructArray.from_arrays(
+            [pa.array(col, f.type) for col, f in zip(self.cols, SPAN_TYPE)],
+            fields=list(SPAN_TYPE),
+        )
+        return pa.ListArray.from_arrays(pa.array(self.offsets, pa.int32()), struct)
+
+
+def _map_docs(
+    df,
+    schema: pa.Schema,
+    inputs: tuple[str, ...],
+    doc,
+    fail,
+    fanout: bool = False,
+    byte_budget: int = DEFAULT_BYTE_BUDGET,
+):
+    """Run ``doc`` over every document of ``df`` in one ``mapInArrow``.
+
+    ``doc(*row)`` gets the values of the ``inputs`` columns, the first being
+    the document, and returns the values of the schema's computed columns
+    in schema order: those that are neither passed through nor ``n_bytes``,
+    ``spans`` or ``exec_partition_id``. When the schema has ``spans``, the
+    slice's span column lists come as one more argument. With ``fanout``,
+    ``doc`` returns a list of such tuples, one output row each. ``fail`` is
+    what a document whose ``doc`` raises emits instead."""
+    names = schema.names
+    n_pass = next(i for i, n in enumerate(names) if n not in _PASS_THROUGH)
+    n_computed = sum(
+        n not in ("n_bytes", "spans", "exec_partition_id") for n in names[n_pass:]
+    )
+    with_spans = "spans" in names
+
+    def doc_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        ctx = TaskContext.get()
+        partition_id = ctx.partitionId() if ctx is not None else -1
         for batch in batches:
-            names = batch.schema.names
-            url_col = batch.column(names.index("url"))
-            html_col = batch.column(names.index("html"))
-            ts_col = batch.column(names.index("warc_ts")) if "warc_ts" in names else None
-            lang_col = batch.column(names.index("lang")) if "lang" in names else None
-            ct_col = (
-                batch.column(names.index("content_type"))
-                if "content_type" in names
-                else None
-            )
-
-            for lo, hi in _slice_offsets(html_col, byte_budget):
-                texts: list[str] = []
-                n_bytes: list[int] = []
-                n_nodes: list[int] = []
-                n_spans: list[int] = []
-                ok: list[bool] = []
-                # columnar span accumulation: 7 flat columns + list offsets
-                span_cols: tuple[list, ...] = ([], [], [], [], [], [], [])
-                span_offsets: list[int] = [0]
-                # one bulk copy per slice — never per-row Arrow scalars
-                raws = html_col.slice(lo, hi - lo).to_pylist()
-                cts = (
-                    ct_col.slice(lo, hi - lo).to_pylist()
-                    if ct_col is not None
-                    else None
-                )
-                for ri, raw in enumerate(raws):
-                    if raw is None:
-                        raw = b""
+            cols = dict(zip(batch.schema.names, batch.columns))
+            for lo, hi in _slice_offsets(cols[inputs[0]], byte_budget):
+                n = hi - lo
+                blobs = cols[inputs[0]].slice(lo, n)
+                args = [blobs.fill_null(b"").to_pylist()] + [
+                    cols[c].slice(lo, n).to_pylist() if c in cols else [None] * n
+                    for c in inputs[1:]
+                ]
+                spans = _SpanColumns() if with_spans else None
+                extra = (spans.cols,) if with_spans else ()
+                # per-column lists, not a row tuple kept per document: kept
+                # containers would set off the cyclic GC every ~700 documents
+                columns: list[list] = [[] for _ in range(n_computed)]
+                src: list[int] = []
+                for i, row in enumerate(zip(*args)):
+                    ok = True
                     try:
-                        # X11: charset sniff + UTF-8 normalization BEFORE
-                        # the parse (engine/encoding.py — zero-copy when
-                        # the input already validates as UTF-8; an HTTP
-                        # Content-Type charset, when the input carries a
-                        # content_type column, outranks the meta prescan).
-                        # Spans index the normalized bytes.
-                        label = (
-                            content_type_charset(cts[ri])
-                            if cts is not None
-                            else None
-                        )
-                        utf8, _codec, _src = to_utf8(raw, label)
-                        doc = parse_document(utf8)
-                        txt = main_text(doc).decode("utf-8", "replace")
-                        ns = (
-                            element_span_columns(doc, span_cols)
-                            if with_spans
-                            else 0
-                        )
-                        texts.append(txt)
-                        n_bytes.append(len(raw))
-                        n_nodes.append(doc.n_nodes())
-                        n_spans.append(ns)
-                        ok.append(True)
+                        out = doc(*row, *extra)
                     except Exception:
-                        # engine contract is never-throw; this is a belt-and-
-                        # braces guard so one poison doc can't kill the task
-                        texts.append("")
-                        n_bytes.append(len(raw))
-                        n_nodes.append(0)
-                        n_spans.append(0)
-                        ok.append(False)
-                    if with_spans:
-                        span_offsets.append(len(span_cols[0]))
-
-                arrays = [
-                    url_col.slice(lo, hi - lo),
-                    (
-                        ts_col.slice(lo, hi - lo)
-                        if ts_col is not None
-                        else pa.nulls(hi - lo, pa.timestamp("us"))
-                    ),
-                    (
-                        lang_col.slice(lo, hi - lo)
-                        if lang_col is not None
-                        else pa.nulls(hi - lo, pa.string())
-                    ),
-                    pa.array(texts, pa.string()),
-                    pa.array(n_bytes, pa.int64()),
-                    pa.array(n_nodes, pa.int32()),
-                    pa.array(n_spans, pa.int32()),
-                    pa.array(ok, pa.bool_()),
-                ]
-                fields = [
-                    ("url", arrays[0].type),
-                    ("warc_ts", arrays[1].type),
-                    ("lang", arrays[2].type),
-                    ("text", pa.string()),
-                    ("n_bytes", pa.int64()),
-                    ("n_nodes", pa.int32()),
-                    ("n_spans", pa.int32()),
-                    ("parse_ok", pa.bool_()),
-                ]
-                if with_spans:
-                    struct = pa.StructArray.from_arrays(
-                        [
-                            pa.array(span_cols[0], pa.int32()),
-                            pa.array(span_cols[1], pa.int32()),
-                            pa.array(span_cols[2], pa.string()),
-                            pa.array(span_cols[3], pa.int64()),
-                            pa.array(span_cols[4], pa.int64()),
-                            pa.array(span_cols[5], pa.int64()),
-                            pa.array(span_cols[6], pa.int64()),
-                        ],
-                        fields=list(SPAN_TYPE),
-                    )
-                    arrays.append(
-                        pa.ListArray.from_arrays(
-                            pa.array(span_offsets, pa.int32()), struct
+                        _log.warning(
+                            "%s failed on a document", doc.__qualname__, exc_info=True
                         )
-                    )
-                    fields.append(("spans", SPANS_TYPE))
-                arrays.append(pa.array([partition_id] * (hi - lo), pa.int32()))
-                fields.append(("exec_partition_id", pa.int32()))
-                yield pa.RecordBatch.from_arrays(
-                    arrays, schema=pa.schema(fields)
-                )
+                        ok, out = False, fail
+                    if with_spans:
+                        spans.end_doc(ok)
+                    if fanout:
+                        src += [i] * len(out)
+                    else:
+                        out = (out,)
+                    for rec in out:
+                        for col, v in zip(columns, rec):
+                            col.append(v)
 
-    return extract_batches
+                n_out = len(src) if fanout else n
+                if not n_out:  # a fan-out slice that emitted nothing
+                    continue
+                take = pa.array(src, pa.int32()) if fanout else None
+                computed = iter(columns)
+                arrays = []
+                for j, f in enumerate(schema):
+                    if j < n_pass:
+                        col = cols.get(f.name)
+                        if col is None:
+                            arr = pa.nulls(n_out, f.type)
+                        else:
+                            arr = col.slice(lo, n)
+                            arr = arr.take(take) if fanout else arr
+                    elif f.name == "n_bytes":
+                        arr = pc.binary_length(blobs).fill_null(0).cast(pa.int64())
+                    elif f.name == "spans":
+                        arr = spans.array()
+                    elif f.name == "exec_partition_id":
+                        arr = pa.array([partition_id] * n_out, pa.int32())
+                    else:
+                        arr = pa.array(next(computed), f.type)
+                    arrays.append(arr)
+                yield pa.RecordBatch.from_arrays(arrays, names=names)
+
+    return df.mapInArrow(doc_batches, from_arrow_schema(schema))
+
+
+def _parse(raw: bytes) -> dom.Document:
+    return dom.parse_document(encoding.to_utf8(raw)[0])
+
+
+def _keys(df) -> list[tuple[str, pa.DataType]]:
+    """(url[, warc_ts]) — warc_ts only when the input has it."""
+    return [("url", pa.string())] + (
+        [("warc_ts", _TS)] if "warc_ts" in df.columns else []
+    )
+
+
+# ----------------------------------------------------------------- HTML leg
+
+EXTRACT_SCHEMA = pa.schema(
+    [
+        ("url", pa.string()),
+        ("warc_ts", _TS),
+        ("lang", pa.string()),
+        ("text", pa.string()),
+        ("n_bytes", pa.int64()),
+        ("n_nodes", pa.int32()),
+        ("n_spans", pa.int32()),
+        ("parse_ok", pa.bool_()),
+        ("spans", pa.list_(SPAN_TYPE)),
+        ("exec_partition_id", pa.int32()),
+    ]
+)
+
+
+def _extract_doc(raw, content_type, spans=None):
+    # X11: charset sniff + UTF-8 normalization BEFORE the parse (zero-copy
+    # when the input already validates as UTF-8; an HTTP Content-Type
+    # charset outranks the meta prescan). Spans index the normalized bytes.
+    utf8 = encoding.to_utf8(raw, encoding.content_type_charset(content_type))[0]
+    doc = dom.parse_document(utf8)
+    text = extract.main_text(doc).decode("utf-8", "replace")
+    n_spans = 0 if spans is None else extract.element_span_columns(doc, spans)
+    return text, doc.n_nodes(), n_spans, True
 
 
 def extract_df(df, with_spans: bool = True, byte_budget: int = DEFAULT_BYTE_BUDGET):
     """Apply the extraction engine to a pages DataFrame (url, html[, warc_ts,
-    lang]) → extracted DataFrame. The single JVM↔Python boundary of the
-    pipeline (SURVEY.md §3.4)."""
-    schema = EXTRACT_SCHEMA if with_spans else EXTRACT_SCHEMA_NO_SPANS
-    return df.mapInArrow(make_extract_fn(with_spans, byte_budget), schema)
+    lang, content_type]) → extracted DataFrame. The single JVM↔Python
+    boundary of the pipeline (SURVEY.md §3.4). A failing document gets
+    text "", n_nodes 0, n_spans 0, empty spans and parse_ok false."""
+    schema = EXTRACT_SCHEMA
+    if not with_spans:
+        schema = schema.remove(schema.get_field_index("spans"))
+    return _map_docs(
+        df, schema, ("html", "content_type"), _extract_doc, ("", 0, 0, False),
+        byte_budget=byte_budget,
+    )
 
 
-def make_select_count_fn(
-    selectors: list[str],
-    names: list[str] | None = None,
-    byte_budget: int = DEFAULT_BYTE_BUDGET,
-):
-    """mapInArrow function counting CSS-selector matches per document
-    (S18 surfaced relationally). Selectors are compiled ONCE here on the
-    driver and shipped in the closure — compile-once/match-many, the analog
-    of the reference's Selector.parse reuse (SURVEY.md §3.2). ``warc_ts``
-    passes through when present (duplicate urls need it as a tiebreaker)."""
-    from htmld_spark.engine.selector import compile_selector, query_select_all
-
+def select_count_df(df, selectors: list[str], names: list[str] | None = None):
+    """Count CSS-selector matches per document: (url[, warc_ts], <name>
+    int...). Selectors are compiled ONCE here on the driver and shipped in
+    the closure — compile-once/match-many, the analog of the reference's
+    Selector.parse reuse (SURVEY.md §3.2). A failing document gets null
+    counts."""
     if names is None:
         names = [f"c{i}" for i in range(len(selectors))]
-    compiled = [(n, compile_selector(s)) for n, s in zip(names, selectors)]
+    compiled = [selector.compile_selector(s) for s in selectors]
 
-    def count_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            bnames = batch.schema.names
-            url_col = batch.column(bnames.index("url"))
-            html_col = batch.column(bnames.index("html"))
-            ts_col = batch.column(bnames.index("warc_ts")) if "warc_ts" in bnames else None
-            for lo, hi in _slice_offsets(html_col, byte_budget):
-                counts: list[list[int]] = [[] for _ in compiled]
-                for raw in html_col.slice(lo, hi - lo).to_pylist():
-                    doc = parse_document(to_utf8(raw or b"")[0])
-                    for slot, (_, sel) in enumerate(compiled):
-                        counts[slot].append(
-                            sum(1 for _ in query_select_all(doc, sel))
-                        )
-                arrays = [url_col.slice(lo, hi - lo)]
-                fields = [("url", arrays[0].type)]
-                if ts_col is not None:
-                    arrays.append(ts_col.slice(lo, hi - lo))
-                    fields.append(("warc_ts", arrays[-1].type))
-                arrays += [pa.array(c, pa.int32()) for c in counts]
-                fields += [(name, pa.int32()) for name, _ in compiled]
-                yield pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
+    def count(raw):
+        doc = _parse(raw)
+        return tuple(
+            sum(1 for _ in selector.query_select_all(doc, sel)) for sel in compiled
+        )
 
-    return count_batches
-
-
-def select_count_df(
-    df,
-    selectors: list[str],
-    names: list[str] | None = None,
-    byte_budget: int = DEFAULT_BYTE_BUDGET,
-):
-    """Count selector matches per document: (url[, warc_ts], <name> int...)."""
-    if names is None:
-        names = [f"c{i}" for i in range(len(selectors))]
-    cols = "url string, "
-    if "warc_ts" in df.columns:
-        cols += "warc_ts timestamp, "
-    schema = cols + ", ".join(f"{n} int" for n in names)
-    return df.mapInArrow(make_select_count_fn(selectors, names, byte_budget), schema)
-
-
-SELECT_EXTRACT_SCHEMA = (
-    "url string, selector string, n_matches int, "
-    "texts array<string>, htmls array<string>"
-)
-SELECT_EXTRACT_SCHEMA_TS = (
-    "url string, warc_ts timestamp, selector string, n_matches int, "
-    "texts array<string>, htmls array<string>"
-)
-
-
-def make_select_extract_fn(
-    selectors: list[str],
-    max_matches: int = 20,
-    with_html: bool = False,
-    byte_budget: int = DEFAULT_BYTE_BUDGET,
-):
-    """The reference's primary per-document workflow — querySelectorAll →
-    innerText/outerHTML (SURVEY.md §3.2/§3.3) — surfaced relationally: one
-    output row per (document, selector) with the matched texts (and
-    optionally markup). Selectors compile once on the driver."""
-    from htmld_spark.engine.extract import inner_text, outer_html
-    from htmld_spark.engine.selector import compile_selector, query_select_all
-
-    compiled = [(s, compile_selector(s)) for s in selectors]
-
-    def select_extract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            url_col = batch.column(names.index("url"))
-            html_col = batch.column(names.index("html"))
-            ts_col = batch.column(names.index("warc_ts")) if "warc_ts" in names else None
-            for lo, hi in _slice_offsets(html_col, byte_budget):
-                urls = url_col.slice(lo, hi - lo).to_pylist()
-                raws = html_col.slice(lo, hi - lo).to_pylist()
-                tss = ts_col.slice(lo, hi - lo) if ts_col is not None else None
-                o_url, o_ts, o_sel, o_n, o_texts, o_htmls = [], [], [], [], [], []
-                for ri, (url, raw) in enumerate(zip(urls, raws)):
-                    doc = parse_document(to_utf8(raw or b"")[0])
-                    for sel_str, sel in compiled:
-                        nodes = []
-                        for nid in query_select_all(doc, sel):
-                            nodes.append(nid)
-                            if len(nodes) >= max_matches:
-                                break
-                        o_url.append(url)
-                        if tss is not None:
-                            o_ts.append(ri)
-                        o_sel.append(sel_str)
-                        o_n.append(len(nodes))
-                        o_texts.append(
-                            [
-                                inner_text(doc, n).decode("utf-8", "replace")
-                                for n in nodes
-                            ]
-                        )
-                        o_htmls.append(
-                            [
-                                outer_html(doc, n).decode("utf-8", "replace")
-                                for n in nodes
-                            ]
-                            if with_html
-                            else None
-                        )
-                arrays = [pa.array(o_url, pa.string())]
-                out_names = ["url"]
-                if tss is not None:
-                    arrays.append(tss.take(pa.array(o_ts, pa.int32())))
-                    out_names.append("warc_ts")
-                arrays += [
-                    pa.array(o_sel, pa.string()),
-                    pa.array(o_n, pa.int32()),
-                    pa.array(o_texts, pa.list_(pa.string())),
-                    pa.array(o_htmls, pa.list_(pa.string())),
-                ]
-                out_names += ["selector", "n_matches", "texts", "htmls"]
-                yield pa.RecordBatch.from_arrays(arrays, names=out_names)
-
-    return select_extract
+    schema = pa.schema(_keys(df) + [(n, pa.int32()) for n in names])
+    return _map_docs(df, schema, ("html",), count, (None,) * len(compiled))
 
 
 def select_extract_df(
-    df,
-    selectors: list[str],
-    max_matches: int = 20,
-    with_html: bool = False,
-    byte_budget: int = DEFAULT_BYTE_BUDGET,
+    df, selectors: list[str], max_matches: int = 20, with_html: bool = False
 ):
-    """querySelectorAll + extract over a pages DataFrame: one row per
-    (url[, warc_ts], selector) with matched texts (and markup when
-    ``with_html``)."""
-    schema = (
-        SELECT_EXTRACT_SCHEMA_TS if "warc_ts" in df.columns else SELECT_EXTRACT_SCHEMA
-    )
-    return df.mapInArrow(
-        make_select_extract_fn(selectors, max_matches, with_html, byte_budget),
-        schema,
-    )
+    """The reference's primary per-document workflow — querySelectorAll →
+    innerText/outerHTML (SURVEY.md §3.2/§3.3) — surfaced relationally: one
+    row per (url[, warc_ts], selector) with the first ``max_matches``
+    matched texts (and markup when ``with_html``). Selectors compile once
+    on the driver. A failing document gets its selector rows with null
+    n_matches, texts and htmls."""
+    compiled = [(s, selector.compile_selector(s)) for s in selectors]
 
-
-ENGINE_META = {
-    "engine_version": ENGINE_VERSION,
-    "rules_version": MAIN_TEXT_RULES_VERSION,
-}
-
-
-# --------------------------------------------------------------------- PDF leg
-
-PDF_EXTRACT_SCHEMA = (
-    "pdf_id bigint, text string, n_pages int, n_bytes bigint, parse_ok boolean"
-)
-
-
-def make_pdf_extract_fn(
-    byte_budget: int = DEFAULT_BYTE_BUDGET,
-    id_col: str = "pdf_id",
-    data_col: str = "pdf",
-):
-    """mapInArrow kernel for the PDF leg of the extraction tier
-    (engine/pdf.py — the north rule's "PDF/layout parse"). Same shape as
-    the HTML kernel: one JVM↔Python crossing per Arrow batch, byte-budget
-    re-chunking for oversized blobs, never-throw per document."""
-    from htmld_spark.engine.pdf import extract_pdf
-
-    def pdf_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            id_arr = batch.column(names.index(id_col))
-            pdf_col = batch.column(names.index(data_col))
-            for lo, hi in _slice_offsets(pdf_col, byte_budget):
-                raws = pdf_col.slice(lo, hi - lo).to_pylist()
-                texts: list[str] = []
-                n_pages: list[int] = []
-                n_bytes: list[int] = []
-                ok: list[bool] = []
-                for raw in raws:
-                    raw = raw or b""
-                    txt, np_ = extract_pdf(raw)
-                    texts.append(txt)
-                    n_pages.append(np_)
-                    n_bytes.append(len(raw))
-                    ok.append(np_ > 0)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        id_arr.slice(lo, hi - lo),
-                        pa.array(texts, pa.string()),
-                        pa.array(n_pages, pa.int32()),
-                        pa.array(n_bytes, pa.int64()),
-                        pa.array(ok, pa.bool_()),
-                    ],
-                    names=[id_col, "text", "n_pages", "n_bytes", "parse_ok"],
-                )
-
-    return pdf_batches
-
-
-def extract_pdf_df(df, byte_budget: int = DEFAULT_BYTE_BUDGET):
-    """Apply the PDF extraction engine to a (pdf_id, pdf) DataFrame →
-    (pdf_id, text, n_pages, n_bytes, parse_ok). One MapInArrow crossing,
-    exactly like the HTML ``extract_df``."""
-    return df.mapInArrow(make_pdf_extract_fn(byte_budget), PDF_EXTRACT_SCHEMA)
-
-
-PDF_PAGES_SCHEMA = (
-    "url string, warc_ts timestamp, lang string, text string, "
-    "n_bytes bigint, n_pages int, parse_ok boolean, exec_partition_id int"
-)
-
-
-def make_pdf_pages_fn(byte_budget: int = DEFAULT_BYTE_BUDGET):
-    """Pages-shaped PDF kernel — the curation-pipeline twin of
-    ``make_extract_fn``: input (url, pdf[, warc_ts, lang]), passthrough
-    conventions identical to the HTML kernel, so ``curate(source='pdf')``
-    drops into the same downstream plan."""
-    from htmld_spark.engine.pdf import extract_pdf
-
-    def pdf_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        try:
-            from pyspark import TaskContext
-
-            ctx = TaskContext.get()
-            partition_id = ctx.partitionId() if ctx is not None else -1
-        except Exception:  # pragma: no cover - non-Spark context
-            partition_id = -1
-
-        for batch in batches:
-            names = batch.schema.names
-            url_col = batch.column(names.index("url"))
-            pdf_col = batch.column(names.index("pdf"))
-            ts_col = batch.column(names.index("warc_ts")) if "warc_ts" in names else None
-            lang_col = batch.column(names.index("lang")) if "lang" in names else None
-            for lo, hi in _slice_offsets(pdf_col, byte_budget):
-                raws = pdf_col.slice(lo, hi - lo).to_pylist()
-                texts: list[str] = []
-                n_pages: list[int] = []
-                n_bytes: list[int] = []
-                ok: list[bool] = []
-                for raw in raws:
-                    raw = raw or b""
-                    txt, np_ = extract_pdf(raw)
-                    texts.append(txt)
-                    n_pages.append(np_)
-                    n_bytes.append(len(raw))
-                    ok.append(np_ > 0)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        url_col.slice(lo, hi - lo),
-                        (
-                            ts_col.slice(lo, hi - lo)
-                            if ts_col is not None
-                            else pa.nulls(hi - lo, pa.timestamp("us"))
-                        ),
-                        (
-                            lang_col.slice(lo, hi - lo)
-                            if lang_col is not None
-                            else pa.nulls(hi - lo, pa.string())
-                        ),
-                        pa.array(texts, pa.string()),
-                        pa.array(n_bytes, pa.int64()),
-                        pa.array(n_pages, pa.int32()),
-                        pa.array(ok, pa.bool_()),
-                        pa.array([partition_id] * (hi - lo), pa.int32()),
-                    ],
-                    names=[
-                        "url", "warc_ts", "lang", "text", "n_bytes",
-                        "n_pages", "parse_ok", "exec_partition_id",
-                    ],
-                )
-
-    return pdf_batches
-
-
-def extract_pdf_pages_df(df, byte_budget: int = DEFAULT_BYTE_BUDGET):
-    """Apply the PDF engine to a (url, pdf[, warc_ts, lang]) pages frame →
-    the HTML kernel's passthrough shape. One MapInArrow crossing."""
-    return df.mapInArrow(make_pdf_pages_fn(byte_budget), PDF_PAGES_SCHEMA)
-
-
-PDF_INFO_SCHEMA = (
-    "pdf_id bigint, title string, producer string, creation_date string, "
-    "encrypted boolean"
-)
-
-
-def pdf_info_df(df, id_col: str = "pdf_id", data_col: str = "pdf"):
-    """Document-metadata extraction (engine/pdf.pdf_info_ex — trailer
-    /Info with a keyed-dict fallback, one parse per doc): (id, pdf) →
-    (id, title, producer, creation_date, encrypted), nulls where absent.
-    Encrypted documents (standard security handler, §7.6) report
-    encrypted=true with null metadata — their Info strings are
-    ciphertext, and mojibake must not enter the corpus. One MapInArrow
-    crossing."""
-    from htmld_spark.engine.pdf import pdf_info_ex
-
-    def info_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            id_arr = batch.column(names.index(id_col))
-            raws = batch.column(names.index(data_col)).to_pylist()
-            pairs = [pdf_info_ex(r or b"") for r in raws]
-            infos = [p[0] for p in pairs]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    id_arr,
-                    pa.array([x.get("Title") for x in infos], pa.string()),
-                    pa.array([x.get("Producer") for x in infos], pa.string()),
-                    pa.array(
-                        [x.get("CreationDate") for x in infos], pa.string()
-                    ),
-                    pa.array([p[1] for p in pairs], pa.bool_()),
-                ],
-                names=[id_col, "title", "producer", "creation_date", "encrypted"],
+    def select(raw):
+        doc = _parse(raw)
+        rows = []
+        for sel_str, sel in compiled:
+            nodes = list(
+                itertools.islice(selector.query_select_all(doc, sel), max_matches)
             )
-
-    return df.mapInArrow(info_batches, PDF_INFO_SCHEMA)
-
-
-LINKS_SCHEMA = (
-    "url string, warc_ts timestamp, links array<string>, "
-    "anchor_texts array<string>, n_links int, parse_ok boolean"
-)
-
-
-def make_links_fn(byte_budget: int = DEFAULT_BYTE_BUDGET):
-    """mapInArrow kernel for outlink extraction (engine/links.py): input
-    (url, html[, warc_ts]) → one links array per page in document order,
-    plus the parallel anchor-text array (links[i] ↔ anchor_texts[i] —
-    the retrieval-training pair view). Same batching discipline as the
-    HTML extraction kernel (byte-budget slices so one batch of large
-    pages can't blow worker memory)."""
-    from htmld_spark.engine import parse_document
-    from htmld_spark.engine.links import extract_links_with_text
-
-    def link_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            url_col = batch.column(names.index("url"))
-            html_col = batch.column(names.index("html"))
-            ts_col = (
-                batch.column(names.index("warc_ts"))
-                if "warc_ts" in names
+            texts = [
+                extract.inner_text(doc, n).decode("utf-8", "replace") for n in nodes
+            ]
+            htmls = (
+                [extract.outer_html(doc, n).decode("utf-8", "replace") for n in nodes]
+                if with_html
                 else None
             )
-            for lo, hi in _slice_offsets(html_col, byte_budget):
-                raws = html_col.slice(lo, hi - lo).to_pylist()
-                urls = url_col.slice(lo, hi - lo).to_pylist()
-                links: list[list[str]] = []
-                texts: list[list[str]] = []
-                ok: list[bool] = []
-                for u, raw in zip(urls, raws):
-                    raw = raw or b""
-                    try:
-                        pairs = extract_links_with_text(
-                            parse_document(to_utf8(raw)[0]), u or ""
-                        )
-                        links.append([p[0] for p in pairs])
-                        texts.append([p[1] for p in pairs])
-                        ok.append(True)
-                    except MemoryError:  # never-raise backstop
-                        links.append([])
-                        texts.append([])
-                        ok.append(False)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        url_col.slice(lo, hi - lo),
-                        (
-                            ts_col.slice(lo, hi - lo)
-                            if ts_col is not None
-                            else pa.nulls(hi - lo, pa.timestamp("us"))
-                        ),
-                        pa.array(links, pa.list_(pa.string())),
-                        pa.array(texts, pa.list_(pa.string())),
-                        pa.array([len(x) for x in links], pa.int32()),
-                        pa.array(ok, pa.bool_()),
-                    ],
-                    names=[
-                        "url", "warc_ts", "links", "anchor_texts",
-                        "n_links", "parse_ok",
-                    ],
-                )
+            rows.append((sel_str, len(nodes), texts, htmls))
+        return rows
 
-    return link_batches
+    schema = pa.schema(
+        _keys(df)
+        + [
+            ("selector", pa.string()),
+            ("n_matches", pa.int32()),
+            ("texts", _STRINGS),
+            ("htmls", _STRINGS),
+        ]
+    )
+    fail = [(s, None, None, None) for s, _ in compiled]
+    return _map_docs(df, schema, ("html",), select, fail, fanout=True)
 
 
-def extract_links_df(df, byte_budget: int = DEFAULT_BYTE_BUDGET):
-    """Outlinks of a pages frame: (url, html[, warc_ts]) → (url, warc_ts,
-    links, anchor_texts, n_links, parse_ok). ONE MapInArrow crossing;
-    downstream frontier policy (dedup, robots, host budgets) and
-    anchor-pair harvesting compose on the array columns with ordinary
-    relational ops (arrays_zip + posexplode stay JVM-side)."""
-    return df.mapInArrow(make_links_fn(byte_budget), LINKS_SCHEMA)
-
-
-# --- X10: page-metadata extraction ------------------------------------
-
-META_SCHEMA = (
-    "url string, warc_ts timestamp, title string, description string, "
-    "meta_robots string, canonical_url string, lang string, "
-    "charset string, og_props array<string>, og_values array<string>, "
-    "parse_ok boolean"
+LINKS_SCHEMA = pa.schema(
+    [
+        ("url", pa.string()),
+        ("warc_ts", _TS),
+        ("links", _STRINGS),
+        ("anchor_texts", _STRINGS),
+        ("n_links", pa.int32()),
+        ("parse_ok", pa.bool_()),
+    ]
 )
 
-_META_NULLS = {
-    "title": None, "description": None, "meta_robots": None,
-    "canonical_url": None, "lang": None, "charset": None,
-    "og_props": [], "og_values": [],
-}
+
+def _links_doc(raw, url):
+    pairs = links.extract_links_with_text(_parse(raw), url or "")
+    return [p[0] for p in pairs], [p[1] for p in pairs], len(pairs), True
 
 
-def make_meta_fn(byte_budget: int = DEFAULT_BYTE_BUDGET):
-    """mapInArrow kernel for page-metadata extraction (engine/meta.py):
-    input (url, html[, warc_ts]) → one metadata record per page (title,
-    description, robots consent, canonical url, lang, charset, the
-    OpenGraph card as parallel sorted arrays). Same batching discipline
-    as the HTML extraction kernel."""
-    from htmld_spark.engine import parse_document
-    from htmld_spark.engine.meta import extract_meta
-
-    fields = (
-        "title", "description", "meta_robots", "canonical_url",
-        "lang", "charset",
-    )
-
-    def meta_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            url_col = batch.column(names.index("url"))
-            html_col = batch.column(names.index("html"))
-            ts_col = (
-                batch.column(names.index("warc_ts"))
-                if "warc_ts" in names
-                else None
-            )
-            for lo, hi in _slice_offsets(html_col, byte_budget):
-                raws = html_col.slice(lo, hi - lo).to_pylist()
-                urls = url_col.slice(lo, hi - lo).to_pylist()
-                recs: list[dict] = []
-                ok: list[bool] = []
-                for u, raw in zip(urls, raws):
-                    try:
-                        recs.append(
-                            extract_meta(
-                                parse_document(to_utf8(raw or b"")[0]),
-                                u or "",
-                            )
-                        )
-                        ok.append(True)
-                    except MemoryError:  # never-raise backstop
-                        recs.append(_META_NULLS)
-                        ok.append(False)
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        url_col.slice(lo, hi - lo),
-                        (
-                            ts_col.slice(lo, hi - lo)
-                            if ts_col is not None
-                            else pa.nulls(hi - lo, pa.timestamp("us"))
-                        ),
-                        *(
-                            pa.array([r[f] for r in recs], pa.string())
-                            for f in fields
-                        ),
-                        pa.array(
-                            [r["og_props"] for r in recs],
-                            pa.list_(pa.string()),
-                        ),
-                        pa.array(
-                            [r["og_values"] for r in recs],
-                            pa.list_(pa.string()),
-                        ),
-                        pa.array(ok, pa.bool_()),
-                    ],
-                    names=[
-                        "url", "warc_ts", "title", "description",
-                        "meta_robots", "canonical_url", "lang", "charset",
-                        "og_props", "og_values", "parse_ok",
-                    ],
-                )
-
-    return meta_batches
+def extract_links_df(df):
+    """Outlinks of a pages frame (engine/links.py): (url, html[, warc_ts]) →
+    (url, warc_ts, links, anchor_texts, n_links, parse_ok), links in
+    document order with the parallel anchor-text array (links[i] ↔
+    anchor_texts[i] — the retrieval-training pair view). Downstream
+    frontier policy (dedup, robots, host budgets) and anchor-pair
+    harvesting compose on the array columns with ordinary relational ops
+    (arrays_zip + posexplode stay JVM-side). A failing document gets empty
+    arrays, n_links 0 and parse_ok false."""
+    return _map_docs(df, LINKS_SCHEMA, ("html", "url"), _links_doc, ([], [], 0, False))
 
 
-def extract_meta_df(df, byte_budget: int = DEFAULT_BYTE_BUDGET):
-    """Page metadata of a pages frame: (url, html[, warc_ts]) → one row
-    per page with the pinned head-metadata record (engine/meta.py).
-    ONE MapInArrow crossing; downstream policy (canonical-vs-L60 dedup
-    keys, consent filtering on meta_robots, language routing) composes
-    with ordinary relational ops."""
-    return df.mapInArrow(make_meta_fn(byte_budget), META_SCHEMA)
+# X10: page metadata
+META_SCHEMA = pa.schema(
+    [
+        ("url", pa.string()),
+        ("warc_ts", _TS),
+        ("title", pa.string()),
+        ("description", pa.string()),
+        ("meta_robots", pa.string()),
+        ("canonical_url", pa.string()),
+        ("lang", pa.string()),
+        ("charset", pa.string()),
+        ("og_props", _STRINGS),
+        ("og_values", _STRINGS),
+        ("parse_ok", pa.bool_()),
+    ]
+)
+_META_KEYS = META_SCHEMA.names[2:-1]
 
 
-# --- X11: charset sniff census ------------------------------------------
+def _meta_doc(raw, url):
+    record = meta.extract_meta(_parse(raw), url or "")
+    return (*(record[k] for k in _META_KEYS), True)
 
-ENCODING_SCHEMA = "url string, encoding string, source string"
+
+def extract_meta_df(df):
+    """Page metadata of a pages frame (engine/meta.py): (url, html[,
+    warc_ts]) → one row per page with the pinned head-metadata record
+    (title, description, robots consent, canonical url, lang, charset, the
+    OpenGraph card as parallel sorted arrays). Downstream policy
+    (canonical-vs-L60 dedup keys, consent filtering on meta_robots,
+    language routing) composes with ordinary relational ops. A failing
+    document gets null strings, empty OpenGraph arrays and parse_ok
+    false."""
+    fail = (None,) * 6 + ([], [], False)
+    return _map_docs(df, META_SCHEMA, ("html", "url"), _meta_doc, fail)
+
+
+# X11: charset sniff census
+ENCODING_SCHEMA = pa.schema(
+    [("url", pa.string()), ("encoding", pa.string()), ("source", pa.string())]
+)
+
+
+def _sniff_doc(raw, content_type):
+    return encoding.sniff_encoding(raw, encoding.content_type_charset(content_type))
 
 
 def sniff_encoding_df(df):
@@ -749,37 +406,95 @@ def sniff_encoding_df(df):
     latin1→cp1252, shift_jis→cp932, …) and ``source`` is bom / meta /
     utf-8 / fallback — plus ``transport`` when the frame carries a
     ``content_type`` column (WARC ingest) whose charset parameter
-    resolves. ONE row-local MapInArrow crossing — the corpus
-    encoding-mix report (GROUP BY encoding downstream stays JVM-side)."""
+    resolves. Row-local; the corpus encoding-mix report (GROUP BY encoding
+    downstream) stays JVM-side. A failing document gets null encoding and
+    source."""
     in_cols = ["url", "html"] + (
         ["content_type"] if "content_type" in df.columns else []
     )
+    return _map_docs(
+        df.select(*in_cols), ENCODING_SCHEMA, ("html", "content_type"),
+        _sniff_doc, (None, None),
+    )
 
-    def sniff_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            url_col = batch.column(names.index("url"))
-            raws = batch.column(names.index("html")).to_pylist()
-            if "content_type" in names:
-                labels = [
-                    content_type_charset(ct)
-                    for ct in batch.column(
-                        names.index("content_type")
-                    ).to_pylist()
-                ]
-            else:
-                labels = [None] * len(raws)
-            pairs = [
-                sniff_encoding(r or b"", lab)
-                for r, lab in zip(raws, labels)
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    url_col,
-                    pa.array([p[0] for p in pairs], pa.string()),
-                    pa.array([p[1] for p in pairs], pa.string()),
-                ],
-                names=["url", "encoding", "source"],
-            )
 
-    return df.select(*in_cols).mapInArrow(sniff_batches, ENCODING_SCHEMA)
+# ------------------------------------------------------------------ PDF leg
+
+PDF_EXTRACT_SCHEMA = pa.schema(
+    [
+        ("pdf_id", pa.int64()),
+        ("text", pa.string()),
+        ("n_pages", pa.int32()),
+        ("n_bytes", pa.int64()),
+        ("parse_ok", pa.bool_()),
+    ]
+)
+PDF_PAGES_SCHEMA = pa.schema(
+    [
+        ("url", pa.string()),
+        ("warc_ts", _TS),
+        ("lang", pa.string()),
+        ("text", pa.string()),
+        ("n_bytes", pa.int64()),
+        ("n_pages", pa.int32()),
+        ("parse_ok", pa.bool_()),
+        ("exec_partition_id", pa.int32()),
+    ]
+)
+_PDF_FAIL = ("", 0, False)
+
+
+def _pdf_doc(raw):
+    # the PDF engine is imported on use: at module level it would cost every
+    # Python worker of an HTML-only job ~2 MB and ~10 ms
+    from htmld_spark.engine import pdf
+
+    text, n_pages = pdf.extract_pdf(raw)
+    return text, n_pages, n_pages > 0
+
+
+def extract_pdf_df(df):
+    """Apply the PDF extraction engine (engine/pdf.py — the north rule's
+    "PDF/layout parse") to a (pdf_id, pdf) DataFrame → (pdf_id, text,
+    n_pages, n_bytes, parse_ok); parse_ok is false when no page parses. A
+    failing document gets text "", n_pages 0 and parse_ok false."""
+    return _map_docs(df, PDF_EXTRACT_SCHEMA, ("pdf",), _pdf_doc, _PDF_FAIL)
+
+
+def extract_pdf_pages_df(df, byte_budget: int = DEFAULT_BYTE_BUDGET):
+    """The pages-shaped PDF kernel — the curation-pipeline twin of
+    ``extract_df``: (url, pdf[, warc_ts, lang]) → the HTML kernel's
+    pass-through shape, so ``curate(source='pdf')`` drops into the same
+    downstream plan. Failure values as ``extract_pdf_df``."""
+    return _map_docs(
+        df, PDF_PAGES_SCHEMA, ("pdf",), _pdf_doc, _PDF_FAIL, byte_budget=byte_budget
+    )
+
+
+PDF_INFO_SCHEMA = pa.schema(
+    [
+        ("pdf_id", pa.int64()),
+        ("title", pa.string()),
+        ("producer", pa.string()),
+        ("creation_date", pa.string()),
+        ("encrypted", pa.bool_()),
+    ]
+)
+
+
+def _pdf_info_doc(raw):
+    from htmld_spark.engine import pdf
+
+    info, encrypted = pdf.pdf_info_ex(raw)
+    return info.get("Title"), info.get("Producer"), info.get("CreationDate"), encrypted
+
+
+def pdf_info_df(df):
+    """Document-metadata extraction (engine/pdf.pdf_info_ex — trailer
+    /Info with a keyed-dict fallback, one parse per doc): (pdf_id, pdf) →
+    (pdf_id, title, producer, creation_date, encrypted), nulls where
+    absent. Encrypted documents (standard security handler, §7.6) report
+    encrypted=true with null metadata — their Info strings are
+    ciphertext, and mojibake must not enter the corpus. A failing document
+    gets nulls in all four columns."""
+    return _map_docs(df, PDF_INFO_SCHEMA, ("pdf",), _pdf_info_doc, (None,) * 4)
