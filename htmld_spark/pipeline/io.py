@@ -9,9 +9,20 @@ partition pruning come for free on filters the job applies (R2).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
+from htmld_spark.functions.udfs import SPAN_TYPE
+
 ICEBERG_PREFIX = "iceberg:"
+
+# The spans integer leaves are high-cardinality offsets: parquet-mr builds a
+# dictionary for each column chunk, then falls back to plain encoding.
+_SPANS_NO_DICTIONARY = {
+    f"parquet.enable.dictionary#spans.list.element.{f.name}": "false"
+    for f in SPAN_TYPE
+    if pa.types.is_integer(f.type)
+}
 
 
 def _has_iceberg(spark: SparkSession) -> bool:
@@ -42,7 +53,8 @@ def write_output(df: DataFrame, target: str, partition_by: list[str] | None = No
     """Append-style write with dynamic partition overwrite: re-writing the
     same partition values replaces ONLY those directories, which makes a
     resumed round idempotent (a crashed round's partial bucket dirs are
-    replaced wholesale on retry)."""
+    replaced wholesale on retry). A ``spans`` column's integer leaves are
+    written without dictionary encoding."""
     if target.startswith(ICEBERG_PREFIX):
         name = target[len(ICEBERG_PREFIX) :]
         writer = df.writeTo(name)
@@ -51,6 +63,8 @@ def write_output(df: DataFrame, target: str, partition_by: list[str] | None = No
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
     )
+    if "spans" in df.columns:
+        writer = writer.options(**_SPANS_NO_DICTIONARY)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(target)

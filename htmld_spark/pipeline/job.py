@@ -50,7 +50,6 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
@@ -90,13 +89,19 @@ MANIFEST_DDL = (
 )
 
 
+def _existing(spark: SparkSession, paths: list[str]) -> list[str]:
+    """The ``paths`` that exist, asked of Hadoop's FileSystem: a read of a
+    missing path fails only after Spark has logged its stack trace."""
+    sc = spark.sparkContext
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    fs = Path(paths[0]).getFileSystem(sc._jsc.hadoopConfiguration())
+    return [p for p in paths if fs.exists(Path(p))]
+
+
 def _read_done_buckets(spark: SparkSession, manifest_path: str) -> set[int]:
-    try:
-        m = spark.read.schema(MANIFEST_DDL).parquet(manifest_path)
-    except AnalysisException as e:
-        if e.getCondition() != "PATH_NOT_FOUND":
-            raise
+    if not _existing(spark, [manifest_path]):
         return set()  # no manifest yet
+    m = spark.read.schema(MANIFEST_DDL).parquet(manifest_path)
     return {r["bucket"] for r in m.select("bucket").distinct().collect()}
 
 
@@ -109,14 +114,22 @@ def _round_lineage(
     when the write created none of them (a bucket that received no rows
     has no directory)."""
     data = os.path.join(cfg.output, "data")
-    sc = spark.sparkContext
-    Path = sc._jvm.org.apache.hadoop.fs.Path
-    fs = Path(data).getFileSystem(sc._jsc.hadoopConfiguration())
-    paths = [os.path.join(data, f"bucket={b}") for b in buckets]
-    paths = [p for p in paths if fs.exists(Path(p))]
+    paths = _existing(spark, [os.path.join(data, f"bucket={b}") for b in buckets])
     if not paths:
         return None
     return spark.read.schema(schema).option("basePath", data).parquet(*paths)
+
+
+def _lineage_agg(out: DataFrame) -> DataFrame:
+    """Per-bucket lineage counts of a round's written output, in one
+    exchange: ``size(collect_set)`` where ``countDistinct`` would plan a
+    second aggregation round and exchange."""
+    return out.groupBy("bucket").agg(
+        F.count("*").alias("n_rows"),
+        F.sum("n_bytes").alias("n_bytes"),
+        F.sum(F.when(~F.col("parse_ok"), 1).otherwise(0)).alias("n_errors"),
+        F.size(F.collect_set("exec_partition_id")).alias("n_exec_partitions"),
+    )
 
 
 def _manifest_df(
@@ -238,16 +251,7 @@ def _run_rounds(spark: SparkSession, cfg: JobConfig, resume: bool) -> dict:
         # Lineage stats from the (small) written output — html is never re-read.
         sc.setJobDescription(f"{step}: lineage")
         out = _round_lineage(spark, cfg, extracted.schema, round_buckets)
-        agg = [] if out is None else (
-            out.groupBy("bucket")
-            .agg(
-                F.count("*").alias("n_rows"),
-                F.sum("n_bytes").alias("n_bytes"),
-                F.sum(F.when(~F.col("parse_ok"), 1).otherwise(0)).alias("n_errors"),
-                F.countDistinct("exec_partition_id").alias("n_exec_partitions"),
-            )
-            .collect()
-        )
+        agg = [] if out is None else _lineage_agg(out).collect()
         lineage = {r["bucket"]: tuple(r)[1:] for r in agg}
         sc.setJobDescription(f"{step}: manifest")
         manifest = _manifest_df(spark, cfg, round_buckets, lineage, wall_ms)

@@ -1,7 +1,8 @@
 """The Arrow document kernels of functions/udfs.py: one poison document
 never kills a batch, a failure in the middle of a document's spans leaves
-the spans column whole, and every public ``*_df`` keeps its declared
-schema.
+the spans column whole, every public ``*_df`` keeps its declared schema,
+and the lazy zip-archive invalidate the scaffold installs re-reads only a
+changed archive.
 
 The first two drive each kernel's batch function in-process, with no Spark:
 ``_Frame`` stands in for the DataFrame, so ``*_df(frame)`` returns the
@@ -200,6 +201,58 @@ def test_spans_stay_whole_when_a_document_fails_midway(monkeypatch):
     assert got[1] == {**expected[1], **fail}
     assert got[:1] + got[2:] == expected[:1] + expected[2:]
     assert [r["n_spans"] for r in got] == [len(r["spans"]) for r in got]
+
+
+@pytest.mark.skipif(
+    not (3, 10) <= sys.version_info < (3, 13),
+    reason="installed on CPython 3.10-3.12 only; 3.13 re-reads lazily itself",
+)
+def test_lazy_zip_invalidate_rereads_only_a_changed_archive(monkeypatch, tmp_path):
+    """Once installed, ``invalidate_caches()`` re-reads a zip archive's
+    directory only when the archive's (mtime, size) changed, and a module
+    added to the archive in place becomes importable."""
+    import importlib.util
+    import os
+    import zipfile
+    import zipimport
+
+    archive = str(tmp_path / "mods.zip")
+
+    def write(*names):
+        with zipfile.ZipFile(archive, "w") as z:
+            for name in names:
+                z.writestr(f"{name}.py", f"NAME = {name!r}\n")
+
+    reads = []
+    stock_read = zipimport._read_directory
+
+    def counted_read(path):
+        reads.append(path)
+        return stock_read(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counted_read)
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches", udfs._stock_invalidate)
+    monkeypatch.setattr(udfs, "_zip_stamps", {})
+    write("a")
+    importer = zipimport.zipimporter(archive)
+    udfs._install_lazy_zip_invalidate()
+    importer.invalidate_caches()
+    importer.invalidate_caches()
+    assert reads == [archive]  # the importer's own first read only
+
+    write("a", "b")  # rewritten in place: the size changes
+    importer.invalidate_caches()
+    assert reads == [archive] * 2
+    spec = importer.find_spec("b")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert mod.NAME == "b"
+
+    st = os.stat(archive)  # the same size, a later mtime
+    os.utime(archive, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    importer.invalidate_caches()
+    importer.invalidate_caches()
+    assert reads == [archive] * 3
 
 
 # The Spark schemas the public kernels declare, pinned as DDL literals.

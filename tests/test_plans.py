@@ -359,3 +359,20 @@ def test_semdedup_pair_condition_uses_hoisted_norms(spark):
     assert pair_lines, p[:2000]
     assert all(ln.count("aggregate(") == 1 for ln in pair_lines), pair_lines
     assert "SQRT(aggregate(transform" not in p
+
+
+def test_job_lineage_aggregate_has_one_exchange(spark):
+    """A round's per-bucket lineage counts (distinct exec partitions among
+    them) take one exchange: no distinct-aggregate rewrite, which costs a
+    second exchange and Spark job every round."""
+    import re
+
+    from htmld_spark.pipeline.job import _lineage_agg
+
+    out = spark.range(100).selectExpr(
+        "CAST(id % 7 AS INT) AS bucket",
+        "id AS n_bytes",
+        "id % 5 > 0 AS parse_ok",
+        "CAST(id % 3 AS INT) AS exec_partition_id",
+    )
+    assert len(re.findall(r"\bExchange\b", plan_of(_lineage_agg(out)))) == 1

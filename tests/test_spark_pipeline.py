@@ -419,3 +419,81 @@ def test_job_raises_on_corrupt_manifest(spark, sparse_job, tmp_path_factory):
         fh.write(b"not a parquet file")
     with pytest.raises(Exception, match="FAILED_READ_FILE"):
         run_extract_job(spark, copy)
+
+
+def test_job_writes_span_offsets_without_dictionary(spark, sparse_job, tmp_path_factory):
+    """The job writes the six integer leaves of ``spans`` (high-cardinality
+    offsets) without dictionary encoding, and its output reads back equal
+    to a default write of the same rows."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    cfg, _, _ = sparse_job
+    out = str(tmp_path_factory.mktemp("spans_job"))
+    shutil.rmtree(out)
+    run_extract_job(spark, JobConfig(source=cfg.source, output=out, n_buckets=2, buckets_per_round=2))
+    data = os.path.join(out, "data")
+    leaves = {
+        f"spans.list.element.{c}"
+        for c in ("node_id", "parent_id", "start", "end", "text_start", "text_end")
+    }
+    spans = []
+    for f in glob.glob(os.path.join(data, "bucket=*", "*.parquet")):
+        md = pq.read_metadata(f)
+        for g in range(md.num_row_groups):
+            chunks = (md.row_group(g).column(c) for c in range(md.num_columns))
+            spans += [c for c in chunks if c.path_in_schema in leaves]
+    assert {c.path_in_schema for c in spans} == leaves
+    assert not any(c.has_dictionary_page for c in spans)
+    assert not any("DICTIONARY" in e for c in spans for e in c.encodings)
+
+    written = spark.read.parquet(data)
+    default = str(tmp_path_factory.mktemp("spans_default")) + "/data"
+    written.write.partitionBy("bucket").parquet(default)
+    key = ["url", "warc_ts"]
+    assert written.count() == 12
+    assert (
+        spark.read.parquet(default).orderBy(key).collect()
+        == written.orderBy(key).collect()
+    )
+
+
+def test_reused_worker_task_reads_no_zip_directory(spark):
+    """A Python worker's next task after a document kernel ran in it
+    re-reads no zip archive's directory in its setup (PySpark's per-task
+    ``importlib.invalidate_caches()``). One-task jobs run until a worker
+    comes back; the document function counts ``zipimport._read_directory``
+    calls in its worker between its calls."""
+    import pyarrow as pa
+
+    from htmld_spark.functions.udfs import _map_docs
+
+    def reads_since_last_call(raw):
+        import os
+        import zipimport
+
+        count = getattr(zipimport, "_reads_since_last_call", None)
+        if count is None:  # this worker's first call: start counting
+            count = zipimport._reads_since_last_call = [0]
+            stock_read = zipimport._read_directory
+
+            def counted_read(path):
+                count[0] += 1
+                return stock_read(path)
+
+            zipimport._read_directory = counted_read
+            return os.getpid(), -1
+        n, count[0] = count[0], 0
+        return os.getpid(), n
+
+    schema = pa.schema([("url", pa.string()), ("pid", pa.int64()), ("reads", pa.int64())])
+    one_task = spark.range(0, 1, 1, 1).selectExpr("'u' AS url", "CAST('x' AS BINARY) AS html")
+    reads = []
+    for _ in range(20):
+        (row,) = _map_docs(one_task, schema, ("html",), reads_since_last_call, (None, None)).collect()
+        if row["reads"] >= 0:
+            reads.append(row["reads"])
+        if len(reads) == 2:
+            break
+    assert reads == [0, 0]
