@@ -1420,6 +1420,9 @@ def _q_semdedup_keep_capped(spark, sf_dir):
     return semdedup_keep(emb, tau=0.3, sample_mod=2, max_cell_size=35)
 
 
+OG_SEP = chr(31)  # ASCII unit separator; the oracle joins with chr(31) too
+
+
 def _q_page_metadata(spark, sf_dir):
     """X10 page-metadata extraction (engine/meta.py — the head-metadata
     leg of the extraction tier): first-<title> (RCDATA, ws-normalized),
@@ -1428,7 +1431,9 @@ def _q_page_metadata(spark, sf_dir):
     (first-<base href> rebasing, http(s)-only, first wins even if
     unusable), <html lang>, charset (meta charset / http-equiv
     content-type, document order), OpenGraph card first-wins-per-key as
-    parallel sorted arrays. ONE MapInArrow over the fixture pages.
+    parallel sorted arrays, returned joined by ``OG_SEP`` (a row of list
+    columns cannot be compared as a set). ONE MapInArrow over the fixture
+    pages.
     Golden oracle: the fixture's COMPOSITION-FIRST expectation (every
     field picks its expected value first, then derives the markup form —
     the generator never normalizes/decodes/resolves;
@@ -1440,7 +1445,9 @@ def _q_page_metadata(spark, sf_dir):
     pages = spark.read.parquet(pages_path)
     return extract_meta_df(pages).select(
         "url", "title", "description", "meta_robots", "canonical_url",
-        "lang", "charset", "og_props", "og_values",
+        "lang", "charset",
+        F.array_join("og_props", OG_SEP).alias("og_props"),
+        F.array_join("og_values", OG_SEP).alias("og_values"),
     )
 
 
@@ -1965,9 +1972,16 @@ def oracle_sql() -> dict[str, str]:
         # X10 page metadata: composition-first fixture expectation
         # (expected values chosen first, markup forms derived —
         # gen_meta.py never normalizes/decodes/resolves)
+        # array_to_string gives NULL for an empty list, Spark's array_join ''
         "page_metadata": (
             "SELECT url, title, description, meta_robots, canonical_url, "
-            f"lang, charset, og_props, og_values FROM read_parquet('{meta_exp}')"
+            "lang, charset, "
+            + ", ".join(
+                f"CASE WHEN {c} IS NULL THEN NULL "
+                f"ELSE coalesce(array_to_string({c}, chr(31)), '') END AS {c}"
+                for c in ("og_props", "og_values")
+            )
+            + f" FROM read_parquet('{meta_exp}')"
         ),
         # L60 url canonicalization: independent DuckDB regexp/list twin
         # of the pinned rule set (construction shared, rules re-derived)

@@ -73,11 +73,6 @@ def _norm_text(raw: bytes) -> str:
     return _WS_RUN.sub(b" ", raw).strip().decode("utf-8", "replace")
 
 
-def _attr_norm(doc: Document, nid: int, name: bytes) -> str | None:
-    v = doc.attr(nid, name)
-    return None if v is None else _norm_text(v)
-
-
 def extract_meta(doc: Document, page_url: str) -> dict:
     """Pinned page-metadata record of ``doc`` (see module docstring).
 

@@ -10,7 +10,9 @@ or deployment dependency on gcc.
 Build model: compiled once per interpreter ABI into a per-user cache dir
 keyed by the source hash (content-addressed, so editing _native.c
 invalidates stale builds), guarded by an exclusive lock file so that a
-local[32] worker fleet importing concurrently compiles exactly once.
+local[32] worker fleet importing concurrently compiles exactly once. The
+source is read as a package resource, so a ``--py-files`` zip that ships
+it (tools/package_pyfiles.py) builds the same module.
 """
 
 from __future__ import annotations
@@ -20,8 +22,7 @@ import os
 import subprocess
 import sys
 import sysconfig
-
-_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_native.c")
+from importlib import resources
 
 _native = None
 _tried = False
@@ -34,14 +35,18 @@ def _cache_dir() -> str:
     return os.path.join(base, "htmld_spark")
 
 
-def _build(so_path: str) -> bool:
-    """Compile _native.c → so_path (atomic rename). Returns success."""
+def _build(so_path: str, src: bytes) -> bool:
+    """Compile the C source ``src`` → so_path (atomic rename). Returns
+    success."""
     inc = sysconfig.get_paths()["include"]
     tmp = f"{so_path}.tmp.{os.getpid()}"
+    src_path = f"{tmp}.c"
     cmd = [
-        "gcc", "-O2", "-fPIC", "-shared", f"-I{inc}", _SRC, "-o", tmp,
+        "gcc", "-O2", "-fPIC", "-shared", f"-I{inc}", src_path, "-o", tmp,
     ]
     try:
+        with open(src_path, "wb") as f:
+            f.write(src)
         r = subprocess.run(
             cmd, capture_output=True, timeout=120, check=False
         )
@@ -52,11 +57,12 @@ def _build(so_path: str) -> bool:
     except Exception:
         return False
     finally:
-        try:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-        except OSError:
-            pass
+        for path in (tmp, src_path):
+            try:
+                if os.path.exists(path):
+                    os.unlink(path)
+            except OSError:
+                pass
 
 
 def _load(so_path: str):
@@ -79,8 +85,8 @@ def get_native():
     if os.environ.get("HTMLD_SPARK_NATIVE", "1") == "0":
         return None
     try:
-        with open(_SRC, "rb") as f:
-            src_hash = hashlib.sha256(f.read()).hexdigest()[:16]
+        src = resources.files(__package__).joinpath("_native.c").read_bytes()
+        src_hash = hashlib.sha256(src).hexdigest()[:16]
         tag = f"{src_hash}-cp{sys.version_info.major}{sys.version_info.minor}"
         try:
             d = _cache_dir()
@@ -99,7 +105,7 @@ def get_native():
             with open(lock_path, "w") as lk:
                 fcntl.flock(lk, fcntl.LOCK_EX)
                 try:
-                    if not os.path.exists(so_path) and not _build(so_path):
+                    if not os.path.exists(so_path) and not _build(so_path, src):
                         return None
                 finally:
                     fcntl.flock(lk, fcntl.LOCK_UN)

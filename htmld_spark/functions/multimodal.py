@@ -8,7 +8,9 @@ compute actual channel means / aHash / RMS / frame slices. Precedence per
 payload: Pillow/soundfile when importable (absent in this container) →
 pure-Python codec → deterministic stub derived from the payload digest
 (exotic formats never kill a task; the ``decoder`` column says which path
-ran).
+ran). Each feature kernel is one ``udfs._map_docs`` crossing, so a payload
+whose decode raises anything else gets the kernel's failure values (null
+columns, or no frame rows) instead of killing the task.
 
 Schemas:
     media(media_id long, kind string, payload binary,
@@ -21,25 +23,53 @@ Schemas:
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import pyarrow as pa
 
 from htmld_spark.functions import codecs
+from htmld_spark.functions.udfs import _map_docs
 
 MEDIA_SCHEMA = (
     "media_id bigint, kind string, payload binary, "
     "meta struct<width:int, height:int, sample_rate:int, n_frames:int>"
 )
-IMAGE_FEATURES_SCHEMA = (
-    "media_id bigint, width int, height int, "
-    "mean_r double, mean_g double, mean_b double, phash bigint, decoder string"
+IMAGE_FEATURES_SCHEMA = pa.schema(
+    [
+        ("media_id", pa.int64()),
+        ("width", pa.int32()),
+        ("height", pa.int32()),
+        ("mean_r", pa.float64()),
+        ("mean_g", pa.float64()),
+        ("mean_b", pa.float64()),
+        ("phash", pa.int64()),
+        ("decoder", pa.string()),
+    ]
 )
-AUDIO_FEATURES_SCHEMA = (
-    "media_id bigint, sample_rate int, n_samples int, rms double, decoder string"
+AUDIO_FEATURES_SCHEMA = pa.schema(
+    [
+        ("media_id", pa.int64()),
+        ("sample_rate", pa.int32()),
+        ("n_samples", pa.int32()),
+        ("rms", pa.float64()),
+        ("decoder", pa.string()),
+    ]
 )
-FRAME_SAMPLE_SCHEMA = (
-    "media_id bigint, frame_idx int, frame_mean double, frame_bytes int"
+FRAME_SAMPLE_SCHEMA = pa.schema(
+    [
+        ("media_id", pa.int64()),
+        ("frame_idx", pa.int32()),
+        ("frame_mean", pa.float64()),
+        ("frame_bytes", pa.int32()),
+    ]
+)
+IMAGE_RESIZE_SCHEMA = pa.schema(
+    [
+        ("media_id", pa.int64()),
+        ("out_w", pa.int32()),
+        ("out_h", pa.int32()),
+        ("resized_md5", pa.string()),
+        ("decoder", pa.string()),
+    ]
 )
 
 
@@ -86,79 +116,38 @@ def _fake_image_stats(payload: bytes, width: int, height: int):
     return round(mean_r, 4), round(mean_g, 4), round(mean_b, 4), phash
 
 
-def make_image_features_fn():
-    """mapInArrow: media batches (kind='image') → image_features rows."""
+def _media(media_df, kind: str):
+    """The (media_id, payload, meta) rows of one media kind; the kind
+    filter is pushed to the scan, so the crossing sees only those rows."""
+    return media_df.filter(f"kind = '{kind}'").select("media_id", "payload", "meta")
 
-    def image_features(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            ids = batch.column(names.index("media_id")).to_pylist()
-            payloads = batch.column(names.index("payload")).to_pylist()
-            metas = batch.column(names.index("meta")).to_pylist()
-            out_id, out_w, out_h = [], [], []
-            out_r, out_g, out_b, out_ph, out_dec = [], [], [], [], []
-            for mid, payload, meta in zip(ids, payloads, metas):
-                payload = payload or b""
-                w = (meta or {}).get("width") or 0
-                h = (meta or {}).get("height") or 0
-                # Built-in BMP decoder FIRST (deterministic, golden-pinned
-                # regardless of Pillow presence); Pillow only for formats
-                # it can't read; deterministic stub last.
-                try:
-                    w, h, mr, mg, mb = codecs.bmp_channel_means(payload)
-                    r, g, b = round(mr, 4), round(mg, 4), round(mb, 4)
-                    ph = codecs.bmp_ahash(payload)
-                    dec = "bmp"
-                except ValueError:
-                    real = _decode_image_real(payload)
-                    if real is not None:  # pragma: no cover - no PIL here
-                        w, h, mr, mg, mb, ph = real
-                        r, g, b = round(mr, 4), round(mg, 4), round(mb, 4)
-                        dec = "pillow"
-                    else:
-                        r, g, b, ph = _fake_image_stats(payload, w, h)
-                        dec = "stub"
-                out_id.append(mid)
-                out_w.append(w)
-                out_h.append(h)
-                out_r.append(r)
-                out_g.append(g)
-                out_b.append(b)
-                out_ph.append(ph)
-                out_dec.append(dec)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, pa.int64()),
-                    pa.array(out_w, pa.int32()),
-                    pa.array(out_h, pa.int32()),
-                    pa.array(out_r, pa.float64()),
-                    pa.array(out_g, pa.float64()),
-                    pa.array(out_b, pa.float64()),
-                    pa.array(out_ph, pa.int64()),
-                    pa.array(out_dec, pa.string()),
-                ],
-                names=[
-                    "media_id",
-                    "width",
-                    "height",
-                    "mean_r",
-                    "mean_g",
-                    "mean_b",
-                    "phash",
-                    "decoder",
-                ],
-            )
 
-    return image_features
+def _image_features(payload: bytes, meta):
+    w = (meta or {}).get("width") or 0
+    h = (meta or {}).get("height") or 0
+    # Built-in BMP decoder FIRST (deterministic, golden-pinned regardless
+    # of Pillow presence); Pillow only for formats it can't read;
+    # deterministic stub last.
+    try:
+        w, h, mr, mg, mb = codecs.bmp_channel_means(payload)
+        ph = codecs.bmp_ahash(payload)
+        dec = "bmp"
+    except ValueError:
+        real = _decode_image_real(payload)
+        if real is None:
+            return (w, h, *_fake_image_stats(payload, w, h), "stub")
+        w, h, mr, mg, mb, ph = real  # pragma: no cover - no PIL here
+        dec = "pillow"
+    return w, h, round(mr, 4), round(mg, 4), round(mb, 4), ph, dec
 
 
 def image_features_df(media_df):
-    """kind='image' media → per-image features (pushes the kind filter to
-    the scan; the UDF sees only image rows)."""
-    from pyspark.sql import functions as F
-
-    return media_df.filter(F.col("kind") == "image").mapInArrow(
-        make_image_features_fn(), IMAGE_FEATURES_SCHEMA
+    """kind='image' media → per-image features. An image whose decode
+    raises anything but the ValueError that selects the next decoder
+    gets null features."""
+    return _map_docs(
+        _media(media_df, "image"), IMAGE_FEATURES_SCHEMA, ("media_id",),
+        ("payload", "meta"), _image_features, (None,) * 7,
     )
 
 
@@ -198,160 +187,74 @@ def image_near_dup_pairs(
     )
 
 
-IMAGE_RESIZE_SCHEMA = (
-    "media_id bigint, out_w int, out_h int, resized_md5 string, decoder string"
-)
-
-
-def make_image_resize_fn(tw: int = 16, th: int = 8):
-    """mapInArrow: media batches (kind='image') → nearest-neighbor resize
-    (codecs.bmp_resize_nn, floor sampling) re-encoded as BMP; rows carry
-    the md5 of the resized payload so the golden oracle pins the exact
-    output BYTES (the fixture composes expected resized payloads from the
-    draw parameters with the same sampling rule). Undecodable payloads
-    take the deterministic stub (md5 of the raw payload, decoder='stub')."""
-
-    def image_resize(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            ids = batch.column(names.index("media_id")).to_pylist()
-            payloads = batch.column(names.index("payload")).to_pylist()
-            out_id, out_md5, out_dec = [], [], []
-            for mid, payload in zip(ids, payloads):
-                payload = payload or b""
-                try:
-                    resized = codecs.bmp_resize_nn(payload, tw, th)
-                    out_md5.append(hashlib.md5(resized).hexdigest())
-                    out_dec.append("bmp")
-                except ValueError:
-                    out_md5.append(hashlib.md5(payload).hexdigest())
-                    out_dec.append("stub")
-                out_id.append(mid)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, pa.int64()),
-                    pa.array([tw] * len(out_id), pa.int32()),
-                    pa.array([th] * len(out_id), pa.int32()),
-                    pa.array(out_md5, pa.string()),
-                    pa.array(out_dec, pa.string()),
-                ],
-                names=["media_id", "out_w", "out_h", "resized_md5", "decoder"],
-            )
-
-    return image_resize
-
-
 def image_resize_df(media_df, tw: int = 16, th: int = 8):
-    """kind='image' media → NN-resized payload digests (kind filter pushed
-    to the scan)."""
-    from pyspark.sql import functions as F
+    """kind='image' media → nearest-neighbor resize (codecs.bmp_resize_nn,
+    floor sampling) re-encoded as BMP; rows carry the md5 of the resized
+    payload so the golden oracle pins the exact output BYTES (the fixture
+    composes expected resized payloads from the draw parameters with the
+    same sampling rule). Undecodable payloads take the deterministic stub
+    (md5 of the raw payload, decoder='stub'); an image whose resize raises
+    anything else gets null columns."""
+    def resize(payload):
+        try:
+            resized, dec = codecs.bmp_resize_nn(payload, tw, th), "bmp"
+        except ValueError:
+            resized, dec = payload, "stub"
+        return tw, th, hashlib.md5(resized).hexdigest(), dec
 
-    return media_df.filter(F.col("kind") == "image").mapInArrow(
-        make_image_resize_fn(tw, th), IMAGE_RESIZE_SCHEMA
+    return _map_docs(
+        _media(media_df, "image"), IMAGE_RESIZE_SCHEMA, ("media_id",), ("payload",),
+        resize, (None,) * 4,
     )
 
 
-def make_audio_features_fn():
-    """mapInArrow: media batches (kind='audio') → audio_features rows.
-    PCM-16 WAV decode (codecs.decode_wav); digest stub for exotic formats."""
-
-    def audio_features(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            ids = batch.column(names.index("media_id")).to_pylist()
-            payloads = batch.column(names.index("payload")).to_pylist()
-            metas = batch.column(names.index("meta")).to_pylist()
-            out_id, out_sr, out_n, out_rms, out_dec = [], [], [], [], []
-            for mid, payload, meta in zip(ids, payloads, metas):
-                payload = payload or b""
-                try:
-                    sr, n, rms = codecs.wav_rms(payload)
-                    dec = "wav"
-                except ValueError:
-                    d = hashlib.sha256(payload).digest()
-                    sr = (meta or {}).get("sample_rate") or 0
-                    n = len(payload) // 2
-                    rms = d[0] / 255.0
-                    dec = "stub"
-                out_id.append(mid)
-                out_sr.append(sr)
-                out_n.append(n)
-                out_rms.append(round(rms, 6))
-                out_dec.append(dec)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, pa.int64()),
-                    pa.array(out_sr, pa.int32()),
-                    pa.array(out_n, pa.int32()),
-                    pa.array(out_rms, pa.float64()),
-                    pa.array(out_dec, pa.string()),
-                ],
-                names=["media_id", "sample_rate", "n_samples", "rms", "decoder"],
-            )
-
-    return audio_features
+def _audio_features(payload: bytes, meta):
+    try:
+        sr, n, rms = codecs.wav_rms(payload)
+        dec = "wav"
+    except ValueError:
+        sr = (meta or {}).get("sample_rate") or 0
+        n = len(payload) // 2
+        rms = hashlib.sha256(payload).digest()[0] / 255.0
+        dec = "stub"
+    return sr, n, round(rms, 6), dec
 
 
 def audio_features_df(media_df):
-    from pyspark.sql import functions as F
-
-    return media_df.filter(F.col("kind") == "audio").mapInArrow(
-        make_audio_features_fn(), AUDIO_FEATURES_SCHEMA
+    """kind='audio' media → (media_id, sample_rate, n_samples, rms,
+    decoder): PCM-16 WAV decode (codecs.wav_rms), digest stub for exotic
+    formats; a clip whose decode raises anything else gets null columns."""
+    return _map_docs(
+        _media(media_df, "audio"), AUDIO_FEATURES_SCHEMA, ("media_id",),
+        ("payload", "meta"), _audio_features, (None,) * 4,
     )
 
 
-def make_frame_sample_fn(every_n: int = 10):
-    """mapInArrow: video media → one row per ``every_n``-th frame with the
-    REAL frame slice decoded from the RAWV container (1 video row → k frame
-    rows; the exploding shape + the decode). Undecodable payloads fall back
-    to a digest stub with n_frames from metadata."""
-
-    def frame_sample(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            names = batch.schema.names
-            ids = batch.column(names.index("media_id")).to_pylist()
-            payloads = batch.column(names.index("payload")).to_pylist()
-            metas = batch.column(names.index("meta")).to_pylist()
-            out_id, out_idx, out_mean, out_nb = [], [], [], []
-            for mid, payload, meta in zip(ids, payloads, metas):
-                payload = payload or b""
-                try:
-                    w, h, n_frames, frame_size = codecs.decode_rawv_header(payload)
-                    for idx in range(0, n_frames, every_n):
-                        frame = codecs.rawv_frame(payload, idx)
-                        out_id.append(mid)
-                        out_idx.append(idx)
-                        out_mean.append(round(sum(frame) / len(frame), 4))
-                        out_nb.append(len(frame))
-                except ValueError:
-                    n_frames = (meta or {}).get("n_frames") or 0
-                    for idx in range(0, n_frames, every_n):
-                        lo = (idx * 37) % max(1, len(payload) - 16)
-                        frame = payload[lo : lo + 16]
-                        out_id.append(mid)
-                        out_idx.append(idx)
-                        out_mean.append(
-                            round(sum(frame) / len(frame), 4) if frame else 0.0
-                        )
-                        out_nb.append(len(frame))
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(out_id, pa.int64()),
-                    pa.array(out_idx, pa.int32()),
-                    pa.array(out_mean, pa.float64()),
-                    pa.array(out_nb, pa.int32()),
-                ],
-                names=["media_id", "frame_idx", "frame_mean", "frame_bytes"],
-            )
-
-    return frame_sample
-
-
 def frame_sample_df(media_df, every_n: int = 10):
-    from pyspark.sql import functions as F
+    """kind='video' media → one row per ``every_n``-th frame with the REAL
+    frame slice decoded from the RAWV container (1 video row → k frame
+    rows). Undecodable payloads fall back to a digest stub with n_frames
+    from metadata; a video whose decode raises anything else yields no
+    rows."""
+    def frames(payload, meta):
+        out = []
+        try:
+            _w, _h, n_frames, _size = codecs.decode_rawv_header(payload)
+            for idx in range(0, n_frames, every_n):
+                frame = codecs.rawv_frame(payload, idx)
+                out.append((idx, round(sum(frame) / len(frame), 4), len(frame)))
+        except ValueError:
+            n_frames = (meta or {}).get("n_frames") or 0
+            for idx in range(0, n_frames, every_n):
+                lo = (idx * 37) % max(1, len(payload) - 16)
+                frame = payload[lo : lo + 16]
+                mean = round(sum(frame) / len(frame), 4) if frame else 0.0
+                out.append((idx, mean, len(frame)))
+        return out
 
-    return media_df.filter(F.col("kind") == "video").mapInArrow(
-        make_frame_sample_fn(every_n), FRAME_SAMPLE_SCHEMA
+    return _map_docs(
+        _media(media_df, "video"), FRAME_SAMPLE_SCHEMA, ("media_id",),
+        ("payload", "meta"), frames, [], fanout=True,
     )
 
 

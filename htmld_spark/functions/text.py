@@ -1400,32 +1400,26 @@ def compression_ratio(
     — the classic cheap redundancy signal in web-text quality filtering
     (highly repetitive pages compress far below ~0.4). No JVM built-in
     exists, so this runs as one mapInArrow crossing per batch (C-side zlib
-    inside; n_chars counts characters, matching F.length)."""
+    inside; n_chars counts characters, matching F.length). A document
+    whose ratio raises gets null n_chars and zlib_ratio."""
+    import zlib
 
-    def ratio_batches(batches):
-        import zlib
+    import pyarrow as pa
 
-        import pyarrow as pa
+    from htmld_spark.functions.udfs import _map_docs
 
-        for batch in batches:
-            names = batch.schema.names
-            ids = batch.column(names.index(id_col))
-            texts = batch.column(names.index(text_col)).to_pylist()
-            n_chars, ratios = [], []
-            for t in texts:
-                t = t or ""
-                raw = t.encode("utf-8")
-                n_chars.append(len(t))
-                ratios.append(
-                    round(len(zlib.compress(raw, 6)) / len(raw), 4) if raw else 0.0
-                )
-            yield pa.RecordBatch.from_arrays(
-                [ids, pa.array(n_chars, pa.int64()), pa.array(ratios, pa.float64())],
-                names=[id_col, "n_chars", "zlib_ratio"],
-            )
+    def ratio(text):
+        raw = text.encode("utf-8")
+        if not raw:
+            return 0, 0.0
+        return len(text), round(len(zlib.compress(raw, 6)) / len(raw), 4)
 
-    return df.select(id_col, text_col).mapInArrow(
-        ratio_batches, f"{id_col} bigint, n_chars bigint, zlib_ratio double"
+    schema = pa.schema(
+        [(id_col, pa.int64()), ("n_chars", pa.int64()), ("zlib_ratio", pa.float64())]
+    )
+    return _map_docs(
+        df.select(id_col, text_col), schema, (id_col,), (text_col,), ratio,
+        (None, None),
     )
 
 

@@ -1,11 +1,18 @@
 """Arrow document kernels: the engine inside one ``mapInArrow`` (SURVEY.md §2.B).
 
-Every document kernel here — extract, select_count, select_extract,
-pdf_extract, pdf_pages, pdf_info, links, meta and the charset sniff — is
-one call of the scaffold ``_map_docs``. A kernel states three things:
+Every per-document crossing of the package is one call of the scaffold
+``_map_docs``: the kernels here (extract, select_count, select_extract,
+pdf_extract, pdf_pages, pdf_info, links, meta and the charset sniff), the
+``sources/`` readers (WARC and WET records, robots.txt directives and
+verdicts, sitemap entries), ``text.compression_ratio`` and the four
+``multimodal`` media kernels. A kernel states four things:
 
 - its output schema, written once as an Arrow schema (the Spark schema is
   derived from it with ``from_arrow_schema``);
+- its keys: the schema columns copied from the input row, wherever they
+  stand in the schema. Keys are named by the kernel, never inferred from
+  a column's name: ``META_SCHEMA`` computes a ``lang`` that an input
+  ``lang`` column must not overwrite;
 - a per-document function over the kernel's input columns, returning the
   values of the output columns the scaffold does not fill;
 - the values it emits when a document fails.
@@ -14,10 +21,10 @@ The scaffold owns the rest of the JVM → Python crossing, which happens
 once per Arrow batch, never per row (BASELINE.json input_hint:
 "vectorized pandas/Arrow UDFs (no per-row Python)"):
 
-- Column lookup. The schema's leading ``url``/``warc_ts``/``lang``/
-  ``pdf_id`` columns pass through from the input, as typed nulls when the
-  input lacks them; an absent optional input reaches the per-document
-  function as None, a null document as ``b""``.
+- Column lookup. Keys pass through from the input, as typed nulls when
+  the input lacks them; an absent optional input reaches the
+  per-document function as None, a null document as ``b""`` (``""`` for
+  a string document).
 - Byte-budget slicing (R4). Each input batch is processed and emitted in
   slices whose summed document bytes stay under a budget, which bounds
   worker memory whatever ``spark.sql.execution.arrow.maxRecordsPerBatch``
@@ -25,13 +32,15 @@ once per Arrow batch, never per row (BASELINE.json input_hint:
 - The columns it can fill itself: ``n_bytes`` (the document's size),
   ``spans`` (accumulated columnar, no per-span Python objects) and
   ``exec_partition_id`` (one TaskContext lookup per task).
-- The Arrow build, including fan-out: a kernel may emit several rows per
-  document, whose pass-through columns are taken from their source row.
+- The Arrow build, including fan-out: a kernel may emit any number of
+  rows per document, whose keys are taken from their source row.
 
 One error policy for every kernel: a document whose function raises never
 kills the task. The exception is logged, the document's partial spans are
 dropped, and it emits the kernel's failure values — ``parse_ok`` false
-where the schema has that column, null computed columns where it does not.
+where the schema has that column, null computed columns where it does
+not. A fan-out kernel's failure value is a list of rows, empty for the
+``sources/`` readers and the frame sampler.
 
 Kernels call engine functions through their modules (``dom.parse_document``
 rather than a name bound at import), so a wrapper installed on an engine
@@ -40,6 +49,10 @@ module, such as a timer or a test's fault injection, sees every call.
 The scaffold's first call in a Python worker also makes the worker's
 per-task ``importlib.invalidate_caches()`` cheap; see
 ``_install_lazy_zip_invalidate``.
+
+The one ``mapInArrow`` outside the scaffold that reads documents is
+``sources.warc.wet_export``: a per-partition sink that writes one file
+and emits one manifest row per task, not a row per document.
 """
 
 from __future__ import annotations
@@ -74,8 +87,7 @@ SPAN_TYPE = pa.struct(
 
 _TS = pa.timestamp("us")
 _STRINGS = pa.list_(pa.string())
-# leading schema columns with these names are copied from the input row
-_PASS_THROUGH = frozenset(("url", "warc_ts", "lang", "pdf_id"))
+_FILLED = ("n_bytes", "spans", "exec_partition_id")
 _log = logging.getLogger(__name__)
 
 
@@ -180,6 +192,7 @@ def _install_lazy_zip_invalidate() -> None:
 def _map_docs(
     df,
     schema: pa.Schema,
+    keys: tuple[str, ...],
     inputs: tuple[str, ...],
     doc,
     fail,
@@ -190,16 +203,13 @@ def _map_docs(
 
     ``doc(*row)`` gets the values of the ``inputs`` columns, the first being
     the document, and returns the values of the schema's computed columns
-    in schema order: those that are neither passed through nor ``n_bytes``,
+    in schema order: those that are neither ``keys`` nor ``n_bytes``,
     ``spans`` or ``exec_partition_id``. When the schema has ``spans``, the
     slice's span column lists come as one more argument. With ``fanout``,
     ``doc`` returns a list of such tuples, one output row each. ``fail`` is
     what a document whose ``doc`` raises emits instead."""
     names = schema.names
-    n_pass = next(i for i, n in enumerate(names) if n not in _PASS_THROUGH)
-    n_computed = sum(
-        n not in ("n_bytes", "spans", "exec_partition_id") for n in names[n_pass:]
-    )
+    n_computed = sum(n not in keys and n not in _FILLED for n in names)
     with_spans = "spans" in names
 
     def doc_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -246,8 +256,8 @@ def _map_docs(
                 take = pa.array(src, pa.int32()) if fanout else None
                 computed = iter(columns)
                 arrays = []
-                for j, f in enumerate(schema):
-                    if j < n_pass:
+                for f in schema:
+                    if f.name in keys:
                         col = cols.get(f.name)
                         if col is None:
                             arr = pa.nulls(n_out, f.type)
@@ -270,6 +280,9 @@ def _map_docs(
 
 def _parse(raw: bytes) -> dom.Document:
     return dom.parse_document(encoding.to_utf8(raw)[0])
+
+
+_PAGE_KEYS = ("url", "warc_ts")
 
 
 def _keys(df) -> list[tuple[str, pa.DataType]]:
@@ -317,8 +330,8 @@ def extract_df(df, with_spans: bool = True, byte_budget: int = DEFAULT_BYTE_BUDG
     if not with_spans:
         schema = schema.remove(schema.get_field_index("spans"))
     return _map_docs(
-        df, schema, ("html", "content_type"), _extract_doc, ("", 0, 0, False),
-        byte_budget=byte_budget,
+        df, schema, _PAGE_KEYS + ("lang",), ("html", "content_type"), _extract_doc,
+        ("", 0, 0, False), byte_budget=byte_budget,
     )
 
 
@@ -339,7 +352,7 @@ def select_count_df(df, selectors: list[str], names: list[str] | None = None):
         )
 
     schema = pa.schema(_keys(df) + [(n, pa.int32()) for n in names])
-    return _map_docs(df, schema, ("html",), count, (None,) * len(compiled))
+    return _map_docs(df, schema, _PAGE_KEYS, ("html",), count, (None,) * len(compiled))
 
 
 def select_extract_df(
@@ -381,7 +394,7 @@ def select_extract_df(
         ]
     )
     fail = [(s, None, None, None) for s, _ in compiled]
-    return _map_docs(df, schema, ("html",), select, fail, fanout=True)
+    return _map_docs(df, schema, _PAGE_KEYS, ("html",), select, fail, fanout=True)
 
 
 LINKS_SCHEMA = pa.schema(
@@ -410,7 +423,9 @@ def extract_links_df(df):
     harvesting compose on the array columns with ordinary relational ops
     (arrays_zip + posexplode stay JVM-side). A failing document gets empty
     arrays, n_links 0 and parse_ok false."""
-    return _map_docs(df, LINKS_SCHEMA, ("html", "url"), _links_doc, ([], [], 0, False))
+    return _map_docs(
+        df, LINKS_SCHEMA, _PAGE_KEYS, ("html", "url"), _links_doc, ([], [], 0, False)
+    )
 
 
 # X10: page metadata
@@ -447,7 +462,8 @@ def extract_meta_df(df):
     document gets null strings, empty OpenGraph arrays and parse_ok
     false."""
     fail = (None,) * 6 + ([], [], False)
-    return _map_docs(df, META_SCHEMA, ("html", "url"), _meta_doc, fail)
+    # lang is computed from the page: not a key, whatever the input has
+    return _map_docs(df, META_SCHEMA, _PAGE_KEYS, ("html", "url"), _meta_doc, fail)
 
 
 # X11: charset sniff census
@@ -474,7 +490,7 @@ def sniff_encoding_df(df):
         ["content_type"] if "content_type" in df.columns else []
     )
     return _map_docs(
-        df.select(*in_cols), ENCODING_SCHEMA, ("html", "content_type"),
+        df.select(*in_cols), ENCODING_SCHEMA, ("url",), ("html", "content_type"),
         _sniff_doc, (None, None),
     )
 
@@ -519,7 +535,7 @@ def extract_pdf_df(df):
     "PDF/layout parse") to a (pdf_id, pdf) DataFrame → (pdf_id, text,
     n_pages, n_bytes, parse_ok); parse_ok is false when no page parses. A
     failing document gets text "", n_pages 0 and parse_ok false."""
-    return _map_docs(df, PDF_EXTRACT_SCHEMA, ("pdf",), _pdf_doc, _PDF_FAIL)
+    return _map_docs(df, PDF_EXTRACT_SCHEMA, ("pdf_id",), ("pdf",), _pdf_doc, _PDF_FAIL)
 
 
 def extract_pdf_pages_df(df, byte_budget: int = DEFAULT_BYTE_BUDGET):
@@ -528,7 +544,8 @@ def extract_pdf_pages_df(df, byte_budget: int = DEFAULT_BYTE_BUDGET):
     pass-through shape, so ``curate(source='pdf')`` drops into the same
     downstream plan. Failure values as ``extract_pdf_df``."""
     return _map_docs(
-        df, PDF_PAGES_SCHEMA, ("pdf",), _pdf_doc, _PDF_FAIL, byte_budget=byte_budget
+        df, PDF_PAGES_SCHEMA, _PAGE_KEYS + ("lang",), ("pdf",), _pdf_doc, _PDF_FAIL,
+        byte_budget=byte_budget,
     )
 
 
@@ -558,4 +575,6 @@ def pdf_info_df(df):
     encrypted=true with null metadata — their Info strings are
     ciphertext, and mojibake must not enter the corpus. A failing document
     gets nulls in all four columns."""
-    return _map_docs(df, PDF_INFO_SCHEMA, ("pdf",), _pdf_info_doc, (None,) * 4)
+    return _map_docs(
+        df, PDF_INFO_SCHEMA, ("pdf_id",), ("pdf",), _pdf_info_doc, (None,) * 4
+    )

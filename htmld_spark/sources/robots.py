@@ -149,30 +149,22 @@ def robots_directives_df(robots_df, agent: str = "*"):
     """(host, robots binary) → (host, crawl_delay double, sitemaps
     array<string>) for ``agent`` — the politeness inputs a frontier
     consumes (per-host fetch spacing; sitemap seeds). ONE mapInArrow
-    over the already-slim robots frame; row-local, no shuffle."""
+    over the already-slim robots frame; row-local, no shuffle. A host
+    whose parse raises gets null crawl_delay and sitemaps."""
     import pyarrow as pa
 
-    def directives(batches):
-        for batch in batches:
-            names = batch.schema.names
-            hosts = batch.column(names.index("host")).to_pylist()
-            txts = batch.column(names.index("robots")).to_pylist()
-            delays, maps = [], []
-            for t in txts:
-                d, s = parse_robots_directives(t, agent)
-                delays.append(d)
-                maps.append(s)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(hosts, pa.string()),
-                    pa.array(delays, pa.float64()),
-                    pa.array(maps, pa.list_(pa.string())),
-                ],
-                names=["host", "crawl_delay", "sitemaps"],
-            )
+    from htmld_spark.functions.udfs import _map_docs
 
-    return robots_df.select("host", "robots").mapInArrow(
-        directives, "host string, crawl_delay double, sitemaps array<string>"
+    schema = pa.schema(
+        [
+            ("host", pa.string()),
+            ("crawl_delay", pa.float64()),
+            ("sitemaps", pa.list_(pa.string())),
+        ]
+    )
+    return _map_docs(
+        robots_df.select("host", "robots"), schema, ("host",), ("robots",),
+        lambda txt: parse_robots_directives(txt, agent), (None, None),
     )
 
 
@@ -275,8 +267,8 @@ def robots_filter(pages, robots_df, agent: str = "*", url_col: str = "url"):
     EXPENSIVE computed upstream still executes twice (column pruning
     defeats ReuseExchange — CLAUDE.md plan-diamond rule); localCheckpoint
     such a frame before calling. NULL-url rows carry no verdict and PASS
-    THROUGH (a null key never matches the anti join)."""
-    import pyarrow as pa
+    THROUGH (a null key never matches the anti join), as do pages whose
+    verdict raises (a null verdict)."""
     from pyspark.sql import functions as F
 
     host = F.coalesce(
@@ -291,39 +283,40 @@ def robots_filter(pages, robots_df, agent: str = "*", url_col: str = "url"):
         "inner",
     )
 
-    def verdicts(batches):
-        cache: dict[str, list[tuple[bool, str]]] = {}
-        for batch in batches:
-            names = batch.schema.names
-            urls = batch.column(names.index(url_col)).to_pylist()
-            hosts = batch.column(names.index("_rb_host")).to_pylist()
-            txts = batch.column(names.index("_rb_txt")).to_pylist()
-            keep = []
-            for u, h, t in zip(urls, hosts, txts):
-                if t is None:
-                    keep.append(True)
-                    continue
-                rules = cache.get(h)
-                if rules is None:
-                    rules = rules_for_agent(parse_robots(t), agent)
-                    if len(cache) > 10_000:  # bound worker memory
-                        cache.clear()
-                    cache[h] = rules
-                keep.append(robots_allowed(rules, url_path(u or "")))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(names.index(url_col)),
-                 pa.array(keep, pa.bool_())],
-                names=[url_col, "_rb_keep"],
-            )
-
-    schema = f"{url_col} string, _rb_keep boolean"
     blocked_urls = (
-        joined.mapInArrow(verdicts, schema)
+        _robots_verdicts(joined, agent, url_col)
         .filter(~F.col("_rb_keep"))
         .select(url_col)
         .localCheckpoint(eager=False)
     )
     return pages.join(blocked_urls, url_col, "left_anti")
+
+
+def _robots_verdicts(joined, agent: str, url_col: str):
+    """(url_col, _rb_host, _rb_txt) → (url_col, _rb_keep): whether
+    ``agent`` may fetch each url under its host's robots.txt. A host's
+    rules are parsed once per worker (its robots bytes repeat across its
+    pages)."""
+    import pyarrow as pa
+
+    from htmld_spark.functions.udfs import _map_docs
+
+    cache: dict[str, list[tuple[bool, str]]] = {}
+
+    def verdict(txt, url, host):
+        rules = cache.get(host)
+        if rules is None:
+            rules = rules_for_agent(parse_robots(txt), agent)
+            if len(cache) > 10_000:  # bound worker memory
+                cache.clear()
+            cache[host] = rules
+        return (robots_allowed(rules, url_path(url or "")),)
+
+    schema = pa.schema([(url_col, pa.string()), ("_rb_keep", pa.bool_())])
+    return _map_docs(
+        joined, schema, (url_col,), ("_rb_txt", url_col, "_rb_host"), verdict,
+        (None,),
+    )
 
 
 # RFC 9309 §2.3.1.4: an unreachable (5xx) robots.txt means the crawler

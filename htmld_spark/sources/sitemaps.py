@@ -129,51 +129,34 @@ def parse_sitemap(
         return []
 
 
-SITEMAP_SCHEMA = (
-    "sitemap_url string, pos int, kind string, loc string, "
-    "lastmod string, changefreq string, priority double"
-)
-
-
 def sitemap_entries_df(df, url_col: str = "url", body_col: str = "body"):
     """Exploded entries of a (sitemap url, payload bytes) frame:
     one row per entry in document order — (sitemap_url, pos, kind, loc,
     lastmod, changefreq, priority). ONE mapInArrow crossing over the
     slim two-column projection; kind='sitemap' rows feed the next fetch
-    round (index files), kind='url' rows feed the frontier (L61)."""
+    round (index files), kind='url' rows feed the frontier (L61). A
+    payload whose parse raises yields no rows."""
     import pyarrow as pa
 
-    def entries(batches):
-        for batch in batches:
-            names = batch.schema.names
-            urls = batch.column(names.index(url_col)).to_pylist()
-            bodies = batch.column(names.index(body_col)).to_pylist()
-            su, pos, kinds, locs, mods, cfs, prios = [], [], [], [], [], [], []
-            for u, b in zip(urls, bodies):
-                for i, (k, loc, lm, cf, pr) in enumerate(
-                    parse_sitemap(b, u or "")
-                ):
-                    su.append(u)
-                    pos.append(i)
-                    kinds.append(k)
-                    locs.append(loc)
-                    mods.append(lm)
-                    cfs.append(cf)
-                    prios.append(pr)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(su, pa.string()),
-                    pa.array(pos, pa.int32()),
-                    pa.array(kinds, pa.string()),
-                    pa.array(locs, pa.string()),
-                    pa.array(mods, pa.string()),
-                    pa.array(cfs, pa.string()),
-                    pa.array(prios, pa.float64()),
-                ],
-                names=[
-                    "sitemap_url", "pos", "kind", "loc", "lastmod",
-                    "changefreq", "priority",
-                ],
-            )
+    from htmld_spark.functions.udfs import _map_docs
 
-    return df.select(url_col, body_col).mapInArrow(entries, SITEMAP_SCHEMA)
+    schema = pa.schema(
+        [
+            ("sitemap_url", pa.string()),
+            ("pos", pa.int32()),
+            ("kind", pa.string()),
+            ("loc", pa.string()),
+            ("lastmod", pa.string()),
+            ("changefreq", pa.string()),
+            ("priority", pa.float64()),
+        ]
+    )
+
+    def entries(body, url):
+        return [(i, *e) for i, e in enumerate(parse_sitemap(body, url or ""))]
+
+    slim = df.select(url_col, body_col).withColumnRenamed(url_col, "sitemap_url")
+    return _map_docs(
+        slim, schema, ("sitemap_url",), (body_col, "sitemap_url"), entries, [],
+        fanout=True,
+    )

@@ -283,47 +283,37 @@ def warc_pages(data: bytes):
     return out
 
 
-PAGES_SCHEMA = (
-    "url string, warc_ts timestamp, html binary, content_type string, "
-    "http_status int, redirect_location string, warc_file string"
-)
-
-
 def warc_pages_df(spark, path: str):
     """Read ``*.warc`` / ``*.warc.gz`` archives into the mandated pages
     shape: binaryFile scan (one task per archive file — the scan split IS
     the parallelism unit) → one mapInArrow parse. Shuffle nothing; feed
-    the result straight to ``extract_df`` or ``curate()``."""
+    the result straight to ``extract_df`` or ``curate()``. An archive
+    whose parse raises yields no rows."""
     import pyarrow as pa
 
-    def parse_batches(batches):
-        for batch in batches:
-            names = batch.schema.names
-            paths = batch.column(names.index("path")).to_pylist()
-            contents = batch.column(names.index("content")).to_pylist()
-            cols = ([], [], [], [], [], [], [])
-            for p, blob in zip(paths, contents):
-                for row in warc_pages(blob or b""):
-                    for slot, v in zip(cols, (*row, p)):
-                        slot.append(v)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(cols[0], pa.string()),
-                    pa.array(cols[1], pa.timestamp("us")),
-                    pa.array(cols[2], pa.binary()),
-                    pa.array(cols[3], pa.string()),
-                    pa.array(cols[4], pa.int32()),
-                    pa.array(cols[5], pa.string()),
-                    pa.array(cols[6], pa.string()),
-                ],
-                names=[
-                    "url", "warc_ts", "html", "content_type",
-                    "http_status", "redirect_location", "warc_file",
-                ],
-            )
+    from htmld_spark.functions.udfs import _map_docs
 
+    schema = pa.schema(
+        [
+            ("url", pa.string()),
+            ("warc_ts", pa.timestamp("us")),
+            ("html", pa.binary()),
+            ("content_type", pa.string()),
+            ("http_status", pa.int32()),
+            ("redirect_location", pa.string()),
+            ("warc_file", pa.string()),
+        ]
+    )
+    return _map_docs(
+        _archives(spark, path), schema, ("warc_file",), ("content",), warc_pages,
+        [], fanout=True,
+    )
+
+
+def _archives(spark, path: str):
+    """(warc_file, content) rows of the archives under ``path``."""
     raw = spark.read.format("binaryFile").load(path)
-    return raw.select("path", "content").mapInArrow(parse_batches, PAGES_SCHEMA)
+    return raw.select("path", "content").withColumnRenamed("path", "warc_file")
 
 
 _HTML_MIMES = ("text/html", "application/xhtml+xml")
@@ -454,46 +444,37 @@ def wet_export(df, out_dir: str, url_col: str = "url",
     return df.select(*cols).mapInArrow(export_batches, WET_MANIFEST_SCHEMA)
 
 
-WET_SCHEMA = "url string, warc_ts timestamp, text string, warc_file string"
+def _wet_records(data: bytes) -> list[tuple]:
+    """(url, warc_ts, text) of each addressable ``conversion`` record of
+    one WET archive, the text decoded as UTF-8 (what the records declare
+    and what ``wet_export`` writes)."""
+    out = []
+    for headers, payload in iter_warc_records(data):
+        url = headers.get("warc-target-uri")
+        if url and headers.get("warc-type", "").lower() == "conversion":
+            ts = _warc_ts(headers.get("warc-date", ""))
+            out.append((url, ts, payload.decode("utf-8", "replace")))
+    return out
 
 
 def wet_pages_df(spark, path: str):
     """Read WET-style shards back: binaryFile scan → one mapInArrow over
     ``conversion`` records (same tolerant reader as the response path —
     member salvage, Content-Length resync). The inverse of
-    ``wet_export``; text decodes as UTF-8 (that is what the records
-    declare and what the exporter writes)."""
+    ``wet_export``. An archive whose parse raises yields no rows."""
     import pyarrow as pa
 
-    def parse_batches(batches):
-        for batch in batches:
-            names = batch.schema.names
-            paths = batch.column(names.index("path")).to_pylist()
-            contents = batch.column(names.index("content")).to_pylist()
-            urls, tss, texts, files = [], [], [], []
-            for p, blob in zip(paths, contents):
-                try:
-                    for headers, payload in iter_warc_records(blob or b""):
-                        if headers.get("warc-type", "").lower() != "conversion":
-                            continue
-                        url = headers.get("warc-target-uri")
-                        if not url:
-                            continue
-                        urls.append(url)
-                        tss.append(_warc_ts(headers.get("warc-date", "")))
-                        texts.append(payload.decode("utf-8", "replace"))
-                        files.append(p)
-                except Exception:
-                    continue
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(urls, pa.string()),
-                    pa.array(tss, pa.timestamp("us")),
-                    pa.array(texts, pa.string()),
-                    pa.array(files, pa.string()),
-                ],
-                names=["url", "warc_ts", "text", "warc_file"],
-            )
+    from htmld_spark.functions.udfs import _map_docs
 
-    raw = spark.read.format("binaryFile").load(path)
-    return raw.select("path", "content").mapInArrow(parse_batches, WET_SCHEMA)
+    schema = pa.schema(
+        [
+            ("url", pa.string()),
+            ("warc_ts", pa.timestamp("us")),
+            ("text", pa.string()),
+            ("warc_file", pa.string()),
+        ]
+    )
+    return _map_docs(
+        _archives(spark, path), schema, ("warc_file",), ("content",), _wet_records,
+        [], fanout=True,
+    )

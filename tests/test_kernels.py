@@ -1,22 +1,31 @@
-"""The Arrow document kernels of functions/udfs.py: one poison document
-never kills a batch, a failure in the middle of a document's spans leaves
-the spans column whole, every public ``*_df`` keeps its declared schema,
-and the lazy zip-archive invalidate the scaffold installs re-reads only a
-changed archive.
+"""The Arrow document kernels, every one a ``udfs._map_docs`` crossing
+(functions/udfs.py, sources/, text.compression_ratio, multimodal): one
+poison document never kills a batch, a failure in the middle of a
+document's spans leaves the spans column whole, keys are the columns a
+kernel names, every public ``*_df`` keeps its declared schema, and the
+lazy zip-archive invalidate the scaffold installs re-reads only a changed
+archive.
 
-The first two drive each kernel's batch function in-process, with no Spark:
-``_Frame`` stands in for the DataFrame, so ``*_df(frame)`` returns the
-function it would hand to ``mapInArrow``."""
+The first three drive each kernel's batch function in-process, with no
+Spark: ``_Frame`` stands in for the DataFrame (and ``_Spark`` for a
+session whose binaryFile reads return one), so ``*_df(frame)`` returns
+the function it would hand to ``mapInArrow``."""
 
+import os
+import random
 import sys
+import zlib
 
 import pyarrow as pa
 import pytest
 
+from fixtures.gen_media import draw_media_row
 from fixtures.gen_pdfs import draw_pdf_row
 from htmld_spark.engine import dom, encoding, extract, pdf
-from htmld_spark.functions import udfs
+from htmld_spark.functions import codecs, multimodal, text, udfs
+from htmld_spark.sources import robots, sitemaps, warc
 
+HERE = os.path.dirname(os.path.abspath(__file__))
 MARK = b"POISON-DOC"
 HTML = [
     b"<html lang=en><head><title>one</title></head>"
@@ -36,8 +45,25 @@ class _Frame:
     def select(self, *cols):
         return _Frame(cols)
 
+    def withColumnRenamed(self, old, new):
+        return _Frame([new if c == old else c for c in self.columns])
+
+    def filter(self, condition):
+        return self
+
     def mapInArrow(self, fn, schema):
         return fn
+
+
+class _Spark:
+    def __init__(self):
+        self.read = self
+
+    def format(self, source):
+        return self
+
+    def load(self, path):
+        return _Frame(["path", "modificationTime", "length", "content"])
 
 
 def _html_batch() -> pa.RecordBatch:
@@ -67,14 +93,89 @@ def _pdf_batch(key: str) -> pa.RecordBatch:
     )
 
 
+def _archives(rtype: str, payload) -> list:
+    """One WARC archive per HTML document (None stays None), each holding
+    two ``rtype`` records whose payloads ``payload`` builds."""
+
+    def record(url, body):
+        head = (
+            f"WARC/1.0\r\nWARC-Type: {rtype}\r\nWARC-Target-URI: {url}\r\n"
+            f"WARC-Date: 2024-03-01T12:00:00Z\r\nContent-Length: {len(body)}"
+        )
+        return head.encode() + b"\r\n\r\n" + body + b"\r\n\r\n"
+
+    return [
+        None if html is None else b"".join(
+            record(f"https://h{i}.test/{j}", payload(html)) for j in range(2)
+        )
+        for i, html in enumerate(HTML)
+    ]
+
+
+def _archive_batch(rtype: str, payload) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([f"crawl/{i}.warc" for i in range(len(HTML))]),
+            pa.array(_archives(rtype, payload), pa.binary()),
+        ],
+        names=["warc_file", "content"],
+    )
+
+
+def _keyed_batch(key: str, keys, name: str, docs, doc_type) -> pa.RecordBatch:
+    return pa.RecordBatch.from_arrays(
+        [pa.array(keys), pa.array(docs, doc_type)], names=[key, name]
+    )
+
+
+HOSTS = [f"h{i}.test" for i in range(4)]
+ROBOTS = [
+    b"User-agent: *\nCrawl-delay: 2\nDisallow: /p\nSitemap: https://h0.test/s.xml\n",
+    b"User-agent: *\nDisallow: /\n# " + MARK + b"\n",
+    None,
+    b"User-agent: bot\nCrawl-delay: 5\nAllow: /\n",
+]
+SITEMAPS = [
+    b"<urlset><url><loc>https://h0.test/a</loc><priority>0.5</priority></url>"
+    b"<url><loc>/b</loc></url></urlset>",
+    b"<!-- " + MARK + b" --><sitemapindex><sitemap><loc>https://h1.test/s.xml"
+    b"</loc></sitemap></sitemapindex>",
+    None,
+    b"https://h3.test/x\nhttps://h3.test/y\n",
+]
+TEXTS = ["a a a a a a a a a a", "text with " + MARK.decode(), None, ""]
+MEDIA_TYPE = pa.struct(
+    [(f, pa.int32()) for f in ("width", "height", "sample_rate", "n_frames")]
+)
+
+
+def _media_batch(kind: str) -> pa.RecordBatch:
+    """Three media rows of ``kind``, the second one marked."""
+    rng = random.Random(7)
+    rows = [r for r in (draw_media_row(i, rng)[0] for i in range(9)) if r[1] == kind]
+    payloads = [r[2] for r in rows]
+    payloads[1] += MARK
+    return pa.RecordBatch.from_arrays(
+        [
+            pa.array([r[0] for r in rows], pa.int64()),
+            pa.array(payloads, pa.binary()),
+            pa.array([r[3] for r in rows], MEDIA_TYPE),
+        ],
+        names=["media_id", "payload", "meta"],
+    )
+
+
 def _patch_everywhere(monkeypatch, module, name, replacement):
-    """Replace ``module.name`` at every binding of it in the package, so a
-    kernel sees the replacement however it reaches the function."""
+    """Replace ``module.name`` there and at every binding of it in the
+    package, so a kernel sees the replacement however it reaches the
+    function."""
     real = getattr(module, name)
-    for mod in list(sys.modules.values()):
-        if getattr(mod, "__name__", "").startswith("htmld_spark") and (
-            getattr(mod, name, None) is real
-        ):
+    package = [
+        mod for mod in list(sys.modules.values())
+        if getattr(mod, "__name__", "").startswith("htmld_spark")
+    ]
+    for mod in [module] + package:
+        if getattr(mod, name, None) is real:
             monkeypatch.setattr(mod, name, replacement)
     return real
 
@@ -93,6 +194,7 @@ def _run(fn, batch) -> list[dict]:
 
 
 HTML_COLS = ["url", "warc_ts", "html", "content_type"]
+MEDIA_COLS = ["media_id", "kind", "payload", "meta"]
 # kernel → (its batch function over a frame, input batch, engine call to
 # poison, the documented failure values of the marked document)
 KERNELS = {
@@ -156,6 +258,85 @@ KERNELS = {
         (pdf, "pdf_info_ex"),
         {"title": None, "producer": None, "creation_date": None, "encrypted": None},
     ),
+    # fan-out kernels whose failing document emits no rows: failure values []
+    "warc_pages": (
+        lambda: warc.warc_pages_df(_Spark(), "crawl/"),
+        lambda: _archive_batch(
+            "response",
+            lambda html: b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + html,
+        ),
+        (warc, "warc_pages"),
+        [],
+    ),
+    "wet_pages": (
+        lambda: warc.wet_pages_df(_Spark(), "crawl/"),
+        lambda: _archive_batch("conversion", lambda html: html),
+        (warc, "iter_warc_records"),
+        [],
+    ),
+    "robots_directives": (
+        lambda: robots.robots_directives_df(_Frame(["host", "robots"]), "bot"),
+        lambda: _keyed_batch("host", HOSTS, "robots", ROBOTS, pa.binary()),
+        (robots, "parse_robots_directives"),
+        {"crawl_delay": None, "sitemaps": None},
+    ),
+    "robots_verdicts": (
+        lambda: robots._robots_verdicts(
+            _Frame(["url", "_rb_host", "_rb_txt"]), "*", "url"
+        ),
+        lambda: pa.RecordBatch.from_arrays(
+            [
+                pa.array([f"https://h{i}.test/p" for i in range(4)]),
+                pa.array(HOSTS),
+                pa.array(ROBOTS, pa.binary()),
+            ],
+            names=["url", "_rb_host", "_rb_txt"],
+        ),
+        (robots, "parse_robots"),
+        {"_rb_keep": None},
+    ),
+    "sitemap_entries": (
+        lambda: sitemaps.sitemap_entries_df(_Frame(["url", "body"])),
+        lambda: _keyed_batch(
+            "sitemap_url", [f"https://h{i}.test/s.xml" for i in range(4)],
+            "body", SITEMAPS, pa.binary(),
+        ),
+        (sitemaps, "parse_sitemap"),
+        [],
+    ),
+    "compression_ratio": (
+        lambda: text.compression_ratio(_Frame(["doc_id", "text"])),
+        lambda: _keyed_batch("doc_id", range(4), "text", TEXTS, pa.string()),
+        (zlib, "compress"),
+        {"n_chars": None, "zlib_ratio": None},
+    ),
+    "image_features": (
+        lambda: multimodal.image_features_df(_Frame(MEDIA_COLS)),
+        lambda: _media_batch("image"),
+        (codecs, "bmp_channel_means"),
+        {
+            "width": None, "height": None, "mean_r": None, "mean_g": None,
+            "mean_b": None, "phash": None, "decoder": None,
+        },
+    ),
+    "image_resize": (
+        lambda: multimodal.image_resize_df(_Frame(MEDIA_COLS)),
+        lambda: _media_batch("image"),
+        (codecs, "bmp_resize_nn"),
+        {"out_w": None, "out_h": None, "resized_md5": None, "decoder": None},
+    ),
+    "audio_features": (
+        lambda: multimodal.audio_features_df(_Frame(MEDIA_COLS)),
+        lambda: _media_batch("audio"),
+        (codecs, "wav_rms"),
+        {"sample_rate": None, "n_samples": None, "rms": None, "decoder": None},
+    ),
+    "frame_sample": (
+        lambda: multimodal.frame_sample_df(_Frame(MEDIA_COLS)),
+        lambda: _media_batch("video"),
+        (codecs, "decode_rawv_header"),
+        [],
+    ),
 }
 
 
@@ -163,7 +344,8 @@ KERNELS = {
 def test_poison_document_gets_failure_values(kernel, monkeypatch):
     """An engine call raising on one document: the batch completes, every
     other row equals an unpatched run, and the marked document's rows carry
-    the kernel's failure values (its pass-through columns unchanged)."""
+    the kernel's failure values (its keys unchanged), or are gone for a
+    fan-out kernel whose failure values are no rows."""
     make_fn, make_batch, (module, name), fail = KERNELS[kernel]
     batch = make_batch()
     expected = _run(make_fn(), batch)
@@ -176,9 +358,12 @@ def test_poison_document_gets_failure_values(kernel, monkeypatch):
         r for r in expected if r[key] != marked
     ]
     marked_rows = [r for r in got if r[key] == marked]
-    assert marked_rows and marked_rows == [
-        {**r, **fail} for r in expected if r[key] == marked
-    ]
+    if fail == []:
+        assert any(r[key] == marked for r in expected) and marked_rows == []
+    else:
+        assert marked_rows and marked_rows == [
+            {**r, **fail} for r in expected if r[key] == marked
+        ]
 
 
 def test_spans_stay_whole_when_a_document_fails_midway(monkeypatch):
@@ -201,6 +386,22 @@ def test_spans_stay_whole_when_a_document_fails_midway(monkeypatch):
     assert got[1] == {**expected[1], **fail}
     assert got[:1] + got[2:] == expected[:1] + expected[2:]
     assert [r["n_spans"] for r in got] == [len(r["spans"]) for r in got]
+
+
+def test_keys_are_the_columns_a_kernel_names():
+    """meta computes ``lang`` from the page, so an input ``lang`` does not
+    overwrite it; extract names ``lang`` as a key and copies it."""
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array(["https://a.test/"]),
+            pa.array(["de"]),
+            pa.array([b"<html lang=en><title>t</title><main><p>x</main>"]),
+        ],
+        names=["url", "lang", "html"],
+    )
+    frame = _Frame(batch.schema.names)
+    assert _run(udfs.extract_meta_df(frame), batch)[0]["lang"] == "en"
+    assert _run(udfs.extract_df(frame), batch)[0]["lang"] == "de"
 
 
 @pytest.mark.skipif(
@@ -292,6 +493,29 @@ META_DDL = (
     "parse_ok boolean"
 )
 ENCODING_DDL = "url string, encoding string, source string"
+WARC_DDL = (
+    "url string, warc_ts timestamp, html binary, content_type string, "
+    "http_status int, redirect_location string, warc_file string"
+)
+WET_DDL = "url string, warc_ts timestamp, text string, warc_file string"
+ROBOTS_DIRECTIVES_DDL = "host string, crawl_delay double, sitemaps array<string>"
+ROBOTS_VERDICTS_DDL = "url string, _rb_keep boolean"
+SITEMAP_DDL = (
+    "sitemap_url string, pos int, kind string, loc string, "
+    "lastmod string, changefreq string, priority double"
+)
+COMPRESSION_RATIO_DDL = "doc_id bigint, n_chars bigint, zlib_ratio double"
+IMAGE_FEATURES_DDL = (
+    "media_id bigint, width int, height int, "
+    "mean_r double, mean_g double, mean_b double, phash bigint, decoder string"
+)
+IMAGE_RESIZE_DDL = (
+    "media_id bigint, out_w int, out_h int, resized_md5 string, decoder string"
+)
+AUDIO_FEATURES_DDL = (
+    "media_id bigint, sample_rate int, n_samples int, rms double, decoder string"
+)
+FRAME_SAMPLE_DDL = "media_id bigint, frame_idx int, frame_mean double, frame_bytes int"
 
 OPTIONAL = "warc_ts timestamp, lang string, content_type string"
 TS = "warc_ts timestamp, "
@@ -329,6 +553,57 @@ SCHEMAS = {
         PAGES_PDF_INPUTS, udfs.extract_pdf_pages_df, lambda ts: PDF_PAGES_DDL
     ),
     "pdf_info": (PDF_INPUTS, udfs.pdf_info_df, lambda ts: PDF_INFO_DDL),
+    # the binaryFile scan of this directory; its files need not be archives
+    "warc_pages": (
+        ("path string",),
+        lambda df: warc.warc_pages_df(df.sparkSession, HERE),
+        lambda ts: WARC_DDL,
+    ),
+    "wet_pages": (
+        ("path string",),
+        lambda df: warc.wet_pages_df(df.sparkSession, HERE),
+        lambda ts: WET_DDL,
+    ),
+    "robots_directives": (
+        ("host string, robots binary",),
+        robots.robots_directives_df,
+        lambda ts: ROBOTS_DIRECTIVES_DDL,
+    ),
+    "robots_verdicts": (
+        ("url string, _rb_host string, _rb_txt binary",),
+        lambda df: robots._robots_verdicts(df, "*", "url"),
+        lambda ts: ROBOTS_VERDICTS_DDL,
+    ),
+    "sitemap_entries": (
+        ("url string, body binary",),
+        sitemaps.sitemap_entries_df,
+        lambda ts: SITEMAP_DDL,
+    ),
+    "compression_ratio": (
+        ("doc_id bigint, text string",),
+        text.compression_ratio,
+        lambda ts: COMPRESSION_RATIO_DDL,
+    ),
+    "image_features": (
+        (multimodal.MEDIA_SCHEMA,),
+        multimodal.image_features_df,
+        lambda ts: IMAGE_FEATURES_DDL,
+    ),
+    "image_resize": (
+        (multimodal.MEDIA_SCHEMA,),
+        multimodal.image_resize_df,
+        lambda ts: IMAGE_RESIZE_DDL,
+    ),
+    "audio_features": (
+        (multimodal.MEDIA_SCHEMA,),
+        multimodal.audio_features_df,
+        lambda ts: AUDIO_FEATURES_DDL,
+    ),
+    "frame_sample": (
+        (multimodal.MEDIA_SCHEMA,),
+        multimodal.frame_sample_df,
+        lambda ts: FRAME_SAMPLE_DDL,
+    ),
 }
 
 

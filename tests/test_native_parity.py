@@ -167,3 +167,30 @@ def test_fallback_path_still_works(monkeypatch):
     monkeypatch.setattr(dom_mod, "_NATIVE_TRIED", True)
     d = dom_mod.parse_document(b"<p>x</p>")
     assert d.n_nodes() == 3
+
+
+def test_native_engine_builds_from_the_py_files_zip(tmp_path):
+    """A ``spark-submit --py-files`` deployment: with only the built zip on
+    the path, outside the repo and with an empty build cache, the package
+    imports from the zip and compiles the C engine from the source shipped
+    inside it."""
+    import subprocess
+    import sys
+
+    from tools.package_pyfiles import main as build_zip
+
+    zip_path = build_zip()
+    env = {k: v for k, v in os.environ.items() if k != "HTMLD_SPARK_NATIVE"}
+    env.update(PYTHONPATH=zip_path, XDG_CACHE_HOME=str(tmp_path / "cache"))
+    probe = (
+        "import htmld_spark\n"
+        "from htmld_spark.engine import native\n"
+        "print(htmld_spark.__file__)\n"
+        "print(native.get_native() is not None)\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300, check=True,
+    ).stdout.splitlines()
+    assert out[0].startswith(zip_path + os.sep)
+    assert out[1] == "True"

@@ -491,7 +491,9 @@ def test_reused_worker_task_reads_no_zip_directory(spark):
     one_task = spark.range(0, 1, 1, 1).selectExpr("'u' AS url", "CAST('x' AS BINARY) AS html")
     reads = []
     for _ in range(20):
-        (row,) = _map_docs(one_task, schema, ("html",), reads_since_last_call, (None, None)).collect()
+        (row,) = _map_docs(
+            one_task, schema, ("url",), ("html",), reads_since_last_call, (None, None)
+        ).collect()
         if row["reads"] >= 0:
             reads.append(row["reads"])
         if len(reads) == 2:

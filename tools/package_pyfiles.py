@@ -1,4 +1,6 @@
-"""Build dist/htmld_spark.zip for spark-submit --py-files."""
+"""Build dist/htmld_spark.zip for spark-submit --py-files: the package's
+Python modules plus the C engine's source, which workers compile on first
+use (htmld_spark/engine/native.py)."""
 
 import os
 import zipfile
@@ -15,7 +17,7 @@ def main() -> str:
             if "__pycache__" in base:
                 continue
             for f in files:
-                if f.endswith(".py"):
+                if f.endswith(".py") or f == "_native.c":
                     full = os.path.join(base, f)
                     z.write(full, os.path.relpath(full, REPO))
     print(out)
